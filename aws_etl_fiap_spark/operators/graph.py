@@ -12,9 +12,9 @@ Scale notes:
   chain means the threshold is too low), so the loop is a handful of rounds
   even at 100 TB edge counts; each round is one join + one aggregate on
   (id, comp) pairs — long/long tuples, never documents.
-- Every round persists its label frame and unpersists the previous one, and
-  truncates lineage with localCheckpoint every few rounds — without that the
-  plan tree doubles per iteration and the driver, not the data, becomes the
+- Every round localCheckpoints its label frame (no persist on top) and
+  releases the previous round's blocks — without the checkpoint the plan
+  tree doubles per iteration and the driver, not the data, becomes the
   bottleneck.
 - For adversarial graphs with giant high-diameter components, swap the loop
   body for the large-star/small-star rounds of Kiveris et al. ("Connected
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from aws_etl_fiap_spark.confs import scoped_conf
 
-CHECKPOINT_EVERY = 1
 HOPS_PER_ROUND = 2
 #: Shuffle-partition sizing for the label loop: rows are 2-3 longs (~20 B),
 #: so a million edges per partition is ~20 MB — far under executor memory.
@@ -510,8 +509,10 @@ def bfs_hops(
     # The checkpointed frontiers ARE the result's lineage — only the edge
     # cache is dead once the loop ends.  Frontier blocks release at driver
     # GC of the returned frame (repo-wide checkpoint lifecycle).
-    _release_checkpoint_blocks(e)
-    if not oriented_unique:
+    # Without the promise, e's blocks were released once sym checkpointed.
+    if oriented_unique:
+        _release_checkpoint_blocks(e)
+    else:
         _release_checkpoint_blocks(sym)
     return reached
 

@@ -1,22 +1,104 @@
 """End-to-end pipeline test: the reference's EP1->EP2->EP3 chain (collect ->
 raw layer -> refined layer -> catalog -> SQL) against the deterministic
 fixture source, including the hyphenated ``stock-splits`` identifier
-round-trip and the dynamic-partition-overwrite semantics."""
+round-trip, the dynamic-partition-overwrite semantics, and the stage task
+counts that size the fetch and the layer writes to the session's task
+slots."""
 
 from __future__ import annotations
+
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from aws_etl_fiap_spark.plans.pipeline import run_pipeline
+from aws_etl_fiap_spark.plans import pipeline
+from aws_etl_fiap_spark.sources.ingest import collect_keys, fixture_fetcher
+from aws_etl_fiap_spark.sources.writers import write_partitioned
 
 KEYS = ["PETR4", "VALE3", "ITUB4", "BBDC4", "ABEV3"]
+GROUP = "test_pipeline"
 
 
 @pytest.fixture(scope="module")
 def result(spark, tmp_path_factory):
+    """One pipeline run under the job group ``GROUP``; each layer write
+    runs under ``GROUP:<layer>`` so its stages can be told apart."""
     warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    return run_pipeline(spark, warehouse, KEYS)
+    sc = spark.sparkContext
+
+    def grouped_write(df, path, *args, **kwargs):
+        sc.setJobGroup(f"{GROUP}:{os.path.basename(path)}", path)
+        try:
+            write_partitioned(df, path, *args, **kwargs)
+        finally:
+            sc.setJobGroup(GROUP, "run_pipeline")
+
+    sc.setJobGroup(GROUP, "run_pipeline")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(pipeline, "write_partitioned", grouped_write)
+            return pipeline.run_pipeline(spark, warehouse, KEYS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _stage_tasks(spark, group: str) -> dict[int, int]:
+    """Task count of every stage of every job run under ``group``."""
+    st = spark.sparkContext.statusTracker()
+    tasks = {}
+    for jid in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(jid).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None:
+                tasks[sid] = info.numTasks
+    return tasks
+
+
+def test_stages_sized_to_task_slots(result, spark):
+    """Task counts, unlike timings, do not depend on machine load: no
+    pipeline stage fans out wider than the session's task slots, and the
+    refined write runs on every slot (AQE may not fold it into one task)."""
+    slots = spark.sparkContext.defaultParallelism
+    writes = {layer: _stage_tasks(spark, f"{GROUP}:{layer}") for layer in ("raw", "refined")}
+    stages = {**_stage_tasks(spark, GROUP), **writes["raw"], **writes["refined"]}
+    assert writes["raw"] and writes["refined"]
+    assert max(stages.values()) <= slots, stages
+    # The write itself is the last stage of the refined write's last job.
+    assert writes["refined"][max(writes["refined"])] == slots, writes["refined"]
+
+
+def test_refined_layout_one_file_per_partition(result):
+    """Each (dataproc, ticker) directory is written by exactly one task."""
+    dataprocs = [os.path.basename(d) for d in glob.glob(f"{result.raw_path}/dataproc=*")]
+    assert dataprocs
+    for dp in dataprocs:
+        dirs = glob.glob(f"{result.refined_path}/{dp}/ticker=*")
+        assert sorted(os.path.basename(d) for d in dirs) == sorted(f"ticker={k}" for k in KEYS)
+        for d in dirs:
+            assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+
+@pytest.mark.parametrize("extra", [-3, 3])
+def test_collect_keys_one_partition_per_task_slot(spark, extra):
+    slots = spark.sparkContext.defaultParallelism
+    keys = [f"K{i:03d}" for i in range(max(1, slots + extra))]
+    df = collect_keys(spark, keys)
+    assert df.rdd.getNumPartitions() == min(len(keys), slots)
+
+
+def test_collect_keys_failed_fetch_drops_only_that_key(spark):
+    keys = ["PETR4", "VALE3", "BROKEN", "ITUB4"]
+
+    def fetcher(key):
+        if key == "BROKEN":
+            raise ConnectionError(key)
+        return fixture_fetcher(key)
+
+    rows = collect_keys(spark, keys, fetcher).groupBy("ticker").count().collect()
+    assert {r.ticker: r["count"] for r in rows} == {k: 22 for k in keys if k != "BROKEN"}
 
 
 def test_raw_layer(result, spark):

@@ -100,6 +100,22 @@ def test_bucketed_join_has_no_exchange(spark, sf_correctness, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
+def test_write_partitioned_caps_rows_per_file(spark, tmp_path):
+    """``target_file_rows`` bounds every file: one Hive partition of 250
+    rows at 100 rows per file lands as ceil(250 / 100) = 3 files."""
+    import glob
+
+    from aws_etl_fiap_spark.sources.writers import write_partitioned
+
+    path = str(tmp_path / "capped")
+    src = spark.range(250).select(F.col("id"), F.lit("x").alias("p"))
+    write_partitioned(src, path, ["p"], target_file_rows=100)
+
+    assert len(glob.glob(f"{path}/p=x/*.parquet")) == 3
+    got = sorted(r.id for r in spark.read.parquet(path).filter(F.col("p") == "x").collect())
+    assert got == list(range(250))
+
+
 def test_compact_partitions_shrinks_files_preserves_values(spark, sf_correctness, tmp_path):
     from aws_etl_fiap_spark.sources.writers import compact_partitions
 
