@@ -1,6 +1,7 @@
 """Multimodal-column queries ([EXT] north star): binary payload metadata ops
-(JVM-side, DuckDB-oracled — sha256/hex/length agree across engines) and the
-Arrow-batched feature-extraction path (rows-only: the decode stub is Python).
+(JVM-side — sha256/hex/length agree across engines) and the Arrow-batched
+feature-extraction and media-decode paths.  Every entry is gated by an exact
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -212,7 +213,7 @@ FROM documents
 )
 def media_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT north star] VIDEO CONTAINER round-trip under the exact gate
-    (NEW_R10 gap-fill — the r9 verdict's "AVI tier is pytest-only" item):
+    (registered in r10 — the r9 verdict's "AVI tier is pytest-only" item):
     each document synthesizes a genuine rawvideo AVI
     (operators/multimodal.documents_as_avi) in one of TWO geometries keyed
     on doc_id parity — 4 frames of 8x8 @ 10 fps vs 3 frames of 6x10 @ 25
@@ -264,8 +265,8 @@ GROUP BY doc_id, frame_idx
 """,
 )
 def media_avi_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT north star] FULL video decode under the exact gate (NEW_R10
-    gap-fill): synthesize a real 4-frame 8x8 AVI per document (pixel
+    """[EXT north star] FULL video decode under the exact gate (registered
+    in r10): synthesize a real 4-frame 8x8 AVI per document (pixel
     (f, i) = (b_{i mod L} * 31 + f*17 + i*7) mod 256 over the text bytes),
     decode it with the complete RIFF/DIB walk (operators/video.avi_decode
     — BGR undo, bottom-up undo, stride-padding strip), and emit per-frame

@@ -7,9 +7,7 @@ Contract (driver's __spark_entry__ protocol):
   documents/embeddings;
 - the comparison is row-count + schema + ORDER-INSENSITIVE value hash, with
   columns sorted BY NAME — so every computed column must carry the same alias
-  on both sides;
-- entries without an oracle (non-SQL-expressible ops: LSH banding, streaming
-  state) get a weaker rows-only check.
+  on both sides.
 
 Determinism rules every entry must obey (else the hash is meaningless):
 - window/LIMIT queries use a TOTAL order (unique tiebreaker columns);
@@ -38,945 +36,79 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 @dataclass(frozen=True)
 class QueryDef:
     spark: SparkQuery
-    oracle: str | None  # DuckDB SQL, or None -> rows-only check
-    doc: str = ""
+    oracle: str  # DuckDB SQL
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQuery]:
-    """Decorator: register a Spark query (and optional DuckDB oracle)."""
+def query(name: str, oracle: str) -> Callable[[SparkQuery], SparkQuery]:
+    """Decorator: register a Spark query and its DuckDB oracle."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QueryDef(spark=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = QueryDef(spark=fn, oracle=oracle)
         return fn
 
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation
-#
-# The round driver grades only the FIRST 50 queries() entries (rounds 1-7
-# evidence: every CORRECTNESS_r*.json covers exactly the first 50 in
-# registration order).  STEADY-STATE ROTATION CONTRACT (amended r7 — the
-# original "green within two rounds" is arithmetically impossible at
-# 192/50):
-#
-#   1. a query whose code or oracle changed this round ALWAYS occupies a
-#      graded slot (CHANGED_R8);
-#   2. a query the driver FAILED last round always occupies a graded slot
-#      (r7: none — all 50 rows in CORRECTNESS_r07.json are green);
-#   3. remaining slots go to the stalest entries first (never-graded, then
-#      oldest green row), so every query's green row is at most FOUR rounds
-#      old in steady state;
-#   4. every deferral is explicit (DEFERRED_R8) and every deferred entry
-#      still runs against its exact oracle in EVERY local pytest
-#      (tests/test_oracle_parity.py) — deferral delays only the driver's
-#      independent row, never the check itself.
-#
-# ROUND-9 WINDOW (ACTIVE — precomputed in r8, followed exactly):
-# CORRECTNESS_r08.json came back 50/50 green, so no failure re-entries;
-# the window is all 44 never-driver-graded round-8 additions (in
-# registration order) + the 6 alphabetically-first r5-green entries.
-# All six CHANGED_R9 entries (round-8 ADVICE fixes: snapshot numeric
-# partition pruning, DP seed contract, unigram/wordpiece empty-word
-# guard, PSI null-predicate totalization) were ALREADY in the staged
-# window (they are r8-new, never graded), so no preemption was needed.
-#
-# TIERING POLICY (structural answer to rotation debt at 236 queries /
-# 50 slots — judge r8 item 3): two tiers, both test-enforced:
-#   - REFERENCE-SURFACE CORE (the 41 SURVEY §2 reference operators and
-#     the flagship): re-graded at a fixed cadence of at most every 4
-#     rounds — the r8 window burned the whole r3-stale core down, so the
-#     core is fresh until r12;
-#   - [EXT] FAMILIES (TPC-H, dedup/ANN/text/media/corpus/privacy/...):
-#     rotated stalest-first behind never-graded entries.
-# With the registry FROZEN at 236 (r8 verdict: growth now costs more
-# verification latency than capability), steady-state max staleness is
-# ceil(236/50) = 5 rounds, and every deferred entry still runs its exact
-# oracle in every local pytest.
-#
-# PRECOMPUTED SCHEDULE:
-#   r9:  DEFERRED_R8_NEVER (44) + 2 late-r9 CHANGED re-entries (snapshot
-#        maintenance fixes) + 4 alphabetically-first r5-green  [ACTIVE]
-#   r10: R10_WINDOW — the 41 remaining r5-green + 9 stalest r6-green
-#        (alphabetical tiebreak), precomputed below and test-pinned;
-#   r11: the remaining 36 r6-green + the 14 stalest r7-green;
-#   r12: the remaining 36 r7-green + the 14 stalest r8-green — back to
-#        steady state.
-# Changed-code re-entries preempt tail slots of whichever round they land
-# in; the displaced tail shifts one round later.  NEW queries (gap-fills
-# only while frozen) lead the next round's window.
-# ---------------------------------------------------------------------------
-
-#: Entries whose implementation or oracle changed in round 8 — these MUST
-#: hold a graded slot (tests/test_registry_order.py enforces it).
-#: - the two acid gates: snapshot.py took the round-7 ADVICE fixes (vacuum
-#:   retention window; CDF NULL-padding across schema evolution);
-#: - sim_topk_pq / sim_topk_ivfpq: the PQ codebook trainer gained the
-#:   m-divides-dim guard (round-7 ADVICE) and, late-r8, the 2D-broadcast
-#:   distance rewrite (4.6x faster training — same Lloyd semantics, gates
-#:   re-verified exact in the driver-sim).  Every other query whose code
-#:   changed late-r8 (semdedup scorer/buckets, psi refactor, range-scheme
-#:   partition clamp with explicit num_partitions callers unaffected) is
-#:   r8-NEW and therefore never-graded — they lead the r9 window.
-CHANGED_R8: tuple[str, ...] = (
-    "acid_snapshot_isolation",
-    "acid_merge_on_read_delete",
-    "sim_topk_pq",
-    "sim_topk_ivfpq",
-)
-
-#: Entries whose implementation or oracle changed in round 9 (the four
-#: round-8 ADVICE findings) — they MUST hold a graded slot
-#: (tests/test_registry_order.py enforces it).  All six are r8-new /
-#: never-graded, so they already lead the staged r9 window:
-#: - acid_hidden_partition_prune: read_table_pruned no longer range-prunes
-#:   identity-transform partitions of non-string type by lexicographic
-#:   string comparison (kept the file instead of guessing);
-#: - privacy_dp_noisy_counts: dp_noisy_counts now requires a caller-
-#:   supplied seed and documents the derandomized-benchmark nature;
-#: - text_unigram_lm_segment / text_wordpiece_segment: empty-word guard —
-#:   F.sequence auto-descends on empty strings, emitting bogus j=-1/L=0
-#:   substrings on any non-single-spaced corpus;
-#: - dq_psi_value_drift / stream_psi_drift_equiv: period assignment is
-#:   total via the shared stats.psi_period_assignment policy — BOTH gates
-#:   pass on_null=False (NULL ts -> baseline), matching the oracle's
-#:   CASE ... ELSE 0 END exactly (the batch operator's default stays
-#:   "raise" for production callers; the late-r9 review found the
-#:   streaming twin's inlined predicate still dropped NULL rows and the
-#:   batch gate's "raise" default would crash where its oracle answers).
-#: Late-r9 additions (adversarial self-review of sources/snapshot.py):
-#: upsert/delete/compact now carry hidden-partition records and the
-#: insert-only upsert refuses narrower batches — the two r8-graded acid
-#: gates ride those code paths, so they preempt the window tail per the
-#: rotation contract ("changed-code re-entries preempt tail slots"),
-#: displacing dedup_simhash and events_json_agg to the r10 window.
-#: Late-r9 text-review fixes whose gate OUTPUT changed at sf0.01 (oracle
-#: updated in lockstep): chunking no longer emits a redundant final chunk
-#: that is a strict subset of the previous one; the phone PII pattern no
-#: longer bridges space-separated numbers; lang_id predicts NULL on zero
-#: stopword evidence (and the confusion matrix inherits it).  They preempt
-#: the four remaining r5-fill tail slots.
-CHANGED_R9: tuple[str, ...] = (
-    "acid_hidden_partition_prune",
-    "privacy_dp_noisy_counts",
-    "text_unigram_lm_segment",
-    "text_wordpiece_segment",
-    "dq_psi_value_drift",
-    "stream_psi_drift_equiv",
-    "acid_snapshot_isolation",
-    "acid_merge_on_read_delete",
-    "text_chunk_windows",
-    "text_redact_pii",
-    "text_lang_id",
-    "text_lid_confusion_matrix",
-    "text_kn_bigram_nll",
-)
-
-#: Implementation changed late-r9 but output PROVEN identical at sf0.01
-#: (hash-compared before/after; the fingerprint empty-text guard only
-#: fires on empty documents, absent from the gate corpus) — spilled to
-#: LEAD the r10 window because the r9 window's 44 never-graded entries
-#: are immovable and its 6 free slots went to output-changed re-entries.
-#: sketch_* entries: the bloom plan dropped a redundant double-pmod and
-#: cms gained parameter guards — expression values provably unchanged
-#: (pmod is idempotent; guards are call-time), re-verified exact in the
-#: driver sim.  sketch_quantile_mergeable's sounder duplicate-aware gate
-#: is already in the r9 window (r8-new).
-CHANGED_R9_SPILL: tuple[str, ...] = (
-    "text_fingerprint",
-    "sketch_cms_heavy_hitters",
-    "sketch_bloom_membership",
-)
-
-#: The round-7 graded window, exactly as CORRECTNESS_r07.json recorded it:
-#: 50 green rows (the five re-entered r6 failures all fixed).  Kept as data
-#: so the ordering tests can prove every registered query is accounted for:
-#: in the r8 window, green last round, or an explicit deferral.
-R7_WINDOW: tuple[str, ...] = (
-    "roundtrip_orc_scan", "roundtrip_schema_evolution",
-    "corpus_pack_sequences", "stream_upsert_merge_equiv",
-    "upsert_partitioned_merge", "layout_zorder_orders", "seq_top_paths_3",
-    "stat_modal_weekday_type", "events_anomaly_zscore_daily",
-    "fin_rolling_corr_view_click", "stat_welch_view_click",
-    "sim_power_iteration_pc1", "events_user_ltv_profile",
-    "diag_key_skew_lineitem", "dq_profile_orders",
-    "pareto_parts_price_size", "score_tree_segments_events",
-    "dedup_containment_pairs", "dedup_winnow_overlap",
-    "corpus_cluster_split", "corpus_bottomk_sample",
-    "fs_point_in_time_join", "text_feature_hashing",
-    "corpus_balanced_sample", "fin_ohlc_daily_bars",
-    "fin_vwap_brand_month", "fin_sma_bollinger", "fin_drawdown_daily",
-    "geo_radius_pairs_customers", "seq_event_transitions",
-    "basket_brand_pairs_lift", "graph_triangle_brands",
-    "join_nullsafe_status_dim", "set_union_by_name_missing",
-    "join_interval_overlap_promo", "er_blocked_part_names",
-    "sim_gram_matrix", "sim_kmeans_lloyd", "sketch_cms_heavy_hitters",
-    "sketch_hll_merge_gate", "sketch_bloom_membership",
-    "attr_last_touch_purchase", "stat_chi2_type_weekday",
-    "profile_user_snapshot", "stat_mad_value_outliers",
-    "ml_ols_closed_form_orders", "events_rolling_wau_7d",
-    "text_bigram_pmi", "text_lid_confusion_matrix", "text_tfidf_top_terms",
-)
-
-#: r5-green deferrals (47): TPC-H + text/media/sim families, r5 rows, code
-#: untouched since.  They lead the r9 window (stalest after this round).
-DEFERRED_R8_R5: tuple[str, ...] = (
-    "array_functions_profile", "bucketed_join_colocated_agg",
-    "corpus_curation_funnel", "corpus_sample_10pct", "dedup_simhash",
-    "events_json_agg", "events_json_extract", "events_variant_agg",
-    "flagship_refined_summary", "join_anti_orderless_customers",
-    "media_dedup_by_digest", "media_extract_features",
-    "media_frame_sample", "media_payload_metadata", "media_resize",
-    "pivot_priority_by_status", "sim_label_centroids", "sim_neardup_pairs",
-    "sim_topk_bruteforce", "stream_session_30min_equiv",
-    "stream_tumbling_10min_equiv", "text_chunk_windows",
-    "text_fingerprint", "text_lang_id", "text_ols_chars_per_token",
-    "text_quality", "text_source_rollup", "text_stats",
-    "text_top_terms_per_lang", "tpch_q10_returned_items",
-    "tpch_q11_important_stock", "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier", "tpch_q16_supplier_part_counts",
-    "tpch_q17_small_quantity_revenue", "tpch_q18_large_orders",
-    "tpch_q19_discounted_revenue", "tpch_q1_pricing_summary",
-    "tpch_q20_promotable_suppliers", "tpch_q21_suppliers_kept_waiting",
-    "tpch_q22_global_sales_opportunity", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-)
-
-#: r6-green deferrals (45): the round-6 window minus the five hash
-#: failures (those re-entered and went green in r7).  Scheduled across
-#: r9 (3 stalest) and r10.
-DEFERRED_R8_R6: tuple[str, ...] = (
-    "corpus_stratified_sample", "stream_static_join_equiv",
-    "stream_stream_interval_join_equiv", "text_redact_pii",
-    "text_repetition_stats", "join_skew_salted_bigbig",
-    "roundtrip_csv_scan", "roundtrip_jsonl_quarantine",
-    "dq_audit_lineitem", "events_quantile_outliers",
-    "events_cohort_retention", "window_percent_cume",
-    "timeseries_gapfill_ffill", "snapshot_diff_orders",
-    "sql_recursive_hierarchy", "corpus_weighted_sample",
-    "corpus_decontaminate", "text_bm25_topk", "text_char_entropy",
-    "scd2_event_history", "profile_histogram_totalprice",
-    "sim_quantize_int8", "graph_pagerank_bipartite",
-    "media_binaryfile_ingest", "pyds_stream_scan_equiv",
-    "events_cascading_rollup", "corpus_shard_write_manifest",
-    "order_global_index_orders", "stream_multibatch_totals_equiv",
-    "events_funnel_conversion", "text_unigram_surprisal",
-    "roundtrip_corrupt_file_skip", "pyds_ticker_api_scan",
-    "pyds_ticker_api_agg", "dedup_minhash_lsh",
-    "dedup_minhash_lsh_portable", "dedup_lsh_contains_exact",
-    "dedup_ngram_jaccard", "dedup_cluster_canonical",
-    "dedup_minhash_verified", "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue", "tpch_q12_shipping_priority_class",
-    "tpch_q14_promo_revenue", "events_islands_sessionize",
-)
-
-#: Queries REGISTERED in round 8 (window already saturated by the
-#: never-graded + r3-stale burn-down): exact-oracled locally from day one,
-#: FIRST picks of the r9 window.
-DEFERRED_R8_NEVER: tuple[str, ...] = (
-    "mv_incremental_refresh",
-    "join_bloom_prefiltered",
-    "text_index_search",
-    "corpus_temperature_mix",
-    "text_gopher_rules",
-    "privacy_k_anon_suppress",
-    "dedup_corpus_spans",
-    "dedup_semdedup_embed",
-    "ann_hard_negatives",
-    "web_domain_policy_rollup",
-    "corpus_length_bucket_pack",
-    "stream_left_outer_join_equiv",
-    "text_bpe_train_merges",
-    "corpus_dsir_weights",
-    "text_bigram_lm_nll",
-    "dq_psi_value_drift",
-    "corpus_token_budget_select",
-    "text_bpe_encode",
-    "ml_logreg_gd_lang",
-    "sketch_quantile_mergeable",
-    "stream_psi_drift_equiv",
-    "media_wav_stats",
-    "media_wav_resample",
-    "media_wav_energy_windows",
-    "corpus_epoch_shuffle",
-    "privacy_l_diversity_release",
-    "graph_community_lpa_brands",
-    "fin_ewma_vol_daily",
-    "ml_logreg_score_filter",
-    "text_kn_bigram_nll",
-    "privacy_dp_noisy_counts",
-    "graph_bfs_hops_brands",
-    "ml_auc_quality_classifier",
-    "sim_kcenter_coreset",
-    "ml_calibration_bins",
-    "dedup_exact_substring",
-    "text_unigram_lm_segment",
-    "acid_hidden_partition_prune",
-    "stat_spearman_len_diversity",
-    "ml_naive_bayes_confusion",
-    "profile_equidepth_totalprice",
-    "privacy_t_closeness_release",
-    "text_wordpiece_segment",
-    "stat_gini_priority_revenue",
-)
-
-DEFERRED_R8: tuple[str, ...] = (
-    DEFERRED_R8_R5 + DEFERRED_R8_R6 + DEFERRED_R8_NEVER
-)
-
-#: The round-8 graded window, exactly as CORRECTNESS_r08.json recorded it:
-#: 50 green rows (zero failures — the first fully clean driver round since
-#: r5).  Kept as data so the ordering tests can prove every registered
-#: query is accounted for.  Composition: the six never-driver-graded
-#: entries first (four of them CHANGED_R8 — round-7 ADVICE fixes), then
-#: the 44 r3-green relational-core entries.
-R8_WINDOW: tuple[str, ...] = (
-    # -- never driver-graded (DEFERRED_R7_NEVER; 4 are CHANGED_R8) --
-    "acid_snapshot_isolation", "acid_merge_on_read_delete",
-    "sim_topk_pq", "sim_topk_ivfpq",
-    "graph_degree_distribution", "text_top_sources_with_other",
-    # -- r3-green relational core, 4 rounds stale --
-    "agg_approx_profile", "agg_cube_flag_status",
-    "agg_distinct_percentiles", "agg_grouping_sets_sql",
-    "agg_rollup_status_priority", "conditional_round", "date_parts_cast",
-    "dedup_exact", "dedup_incremental_new_docs", "distinct_pairs",
-    "events_json_typed_parse", "events_rollup_type_user",
-    "events_session_30min", "events_sliding_10min_5min",
-    "events_tumbling_10min", "global_count", "join_asof_prev_low_order",
-    "join_full_nation_activity", "join_left_customer_orders",
-    "join_range_price_bands", "join_semi_urgent_customers",
-    "keyed_stats_single", "null_filter_project", "refined_detail_lag",
-    "rename_literal_hyphen", "roundtrip_partitioned_agg",
-    "set_nations_except", "set_nations_except_all",
-    "set_nations_intersect", "set_nations_intersect_all", "sim_topk_ivf",
-    "sim_topk_lsh", "skew_salted_agg", "sort_limit_topn",
-    "sql_athena_canonical", "sql_hint_broadcast_join",
-    "stream_dedup_equiv", "stream_sliding_10min_5min_equiv",
-    "stream_stateful_totals_equiv", "union_all_sources",
-    "unpivot_lineitem_measures", "window_lead_first_last_ntile",
-    "window_rank_top3_orders", "window_rolling_7row_avg",
-)
-
-
-#: THE ACTIVE ROUND-9 WINDOW (precomputed in r8, activated r9, tail
-#: preempted late-r9): all 44 never-driver-graded round-8 additions
-#: (DEFERRED_R8_NEVER, in registration order), then the two late-r9
-#: CHANGED_R9 re-entries (snapshot.py maintenance-commit fixes), then the
-#: alphabetically-first DEFERRED_R8_R5 entries filling the remaining
-#: slots (the preempted tail — dedup_simhash, events_json_agg — shifts to
-#: the r10 window per the rotation contract).  The six r8-new CHANGED_R9
-#: entries are already inside via DEFERRED_R8_NEVER (test-enforced).
-R9_WINDOW: tuple[str, ...] = (
-    DEFERRED_R8_NEVER
-    + (
-        "acid_snapshot_isolation",
-        "acid_merge_on_read_delete",
-        "text_chunk_windows",
-        "text_redact_pii",
-        "text_lang_id",
-        "text_lid_confusion_matrix",
-        # the displaced r5-fill tail (shifts to the r10 window):
-        "array_functions_profile",
-        "bucketed_join_colocated_agg",
-        "corpus_curation_funnel",
-        "corpus_sample_10pct",
-        "dedup_simhash",
-        "events_json_agg",
-        "events_json_extract",
-        "events_variant_agg",
-        "flagship_refined_summary",
-        "join_anti_orderless_customers",
-    )
-)[:50]
-
-#: Round-9 deferral tiers (policy clause 4 accounting): everything not in
-#: the active window and not green last round, partitioned by the age of
-#: its newest green driver row.  Every entry still runs its exact oracle
-#: in every local pytest (tests/test_oracle_parity.py).
-DEFERRED_R9_R5: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R8_R5 if n not in R9_WINDOW
-)  # the r5-green tier -> it IS the r10 window's lead block
-DEFERRED_R9_R6: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R8_R6 if n not in R9_WINDOW
-)  # r6-green entries (text_redact_pii re-entered the r9 window)
-DEFERRED_R9_R7: tuple[str, ...] = tuple(
-    n for n in R7_WINDOW if n not in R9_WINDOW
-)  # r7-green entries (text_lid_confusion_matrix re-entered)
-
-DEFERRED_R9: tuple[str, ...] = (
-    DEFERRED_R9_R5 + DEFERRED_R9_R6 + DEFERRED_R9_R7
-)
-
-#: THE ACTIVE ROUND-10 WINDOW (precomputed in r9, activated r10):
-#: the 3 CHANGED_R9_SPILL re-entries lead (output proven identical but
-#: code changed — contract clause 1), then ALL remaining r5-green
-#: entries (the stalest tier is fully drained this round: 44 here + the
-#: spilled text_fingerprint = the whole 45-entry DEFERRED_R9_R5), then
-#: the [:50] truncation leaves len(R10_WINDOW) - len(CHANGED_R9_SPILL)
-#: - len(DEFERRED_R9_R5) = 3 slots for the alphabetically-first r6-green
-#: entries (NOT the 9 the r9 comment claimed — the spill displaced six;
-#: ADVICE r9 item 4).  CORRECTNESS_r09.json is 50/50 green, so there are
-#: no failure re-entries (FAILED_R9 below is empty, test-enforced).
-R10_WINDOW: tuple[str, ...] = (
-    CHANGED_R9_SPILL
-    + tuple(n for n in DEFERRED_R9_R5 if n not in CHANGED_R9_SPILL)
-    + tuple(sorted(DEFERRED_R9_R6))
-)[:50]
-
-#: Driver failures from round 9: none — CORRECTNESS_r09.json is 50/50
-#: green (verified by tests/test_registry_order.py against the artifact).
-FAILED_R9: tuple[str, ...] = ()
-
-#: Entries whose implementation or oracle changes in round 10 AND that
-#: already hold a graded slot in the active window — append here as code
-#: changes land (test-enforced).
-#: - corpus_stratified_sample: stratified_quota_sample re-accepts
-#:   n_refine_buckets as a VALIDATED no-op kwarg (r9 ADVICE item 2 — the
-#:   gate's call site passes no kwargs; output identical, re-verified
-#:   exact in the driver sim).
-#: - text_ols_chars_per_token: ols_fit_per_group gained the int64
-#:   overflow guard (numpy sums wrap silently — r10 review); the gate's
-#:   groups are far below the bound, output identical, re-verified exact.
-CHANGED_R10: tuple[str, ...] = (
-    "corpus_stratified_sample",
-    "text_ols_chars_per_token",
-)
-
-#: Implementation changed in r10 but output PROVEN identical at sf0.01
-#: (driver-sim re-verified exact) AND the entries sit on fresh r9-green
-#: rows, while the r10 window's tail is immovable (the r5-stale tier is
-#: at the staleness ceiling and cannot shift) — so, per the r9
-#: CHANGED_R9_SPILL precedent, they LEAD the r11 window instead:
-#: - the three acid gates + mv_incremental_refresh ride snapshot.py's
-#:   write paths, which gained start-of-write heartbeat markers next to
-#:   staging dirs and a file-mtime-keyed vacuum sweep (r9 ADVICE item 3),
-#:   plus exact decimal.Decimal comparison in _identity_may_overlap
-#:   (r9 ADVICE item 1).  Values and manifests are byte-identical; only
-#:   orphan-sweep bookkeeping and the decimal pruning path changed.
-#: - mv_incremental_refresh ALSO rides the r10 IVM null-sum fix: the
-#:   delta algebra now carries per-measure non-null counts so a group
-#:   whose last non-null measure is deleted refreshes to NULL (pure
-#:   cancellation rendered 0) — found by the new hypothesis property;
-#:   the gate corpus has no NULL measures, output identical,
-#:   re-verified exact.
-#: - web_domain_policy_rollup rides registered_domain, which gained the
-#:   single-label-host guard (ANSI element_at(-2) is a job-killing
-#:   ArrayIndexOutOfBounds, r10 adversarial review); the gate corpus has
-#:   no single-label hosts, output identical, re-verified exact.
-#: - text_index_search rides conjunctive_search/sql_contains_all_terms,
-#:   which gained empty-term-set refusal + SQL quote escaping (r10
-#:   review); the gate passes three non-empty plain terms, output
-#:   identical, re-verified exact.  Late-r10 it also rides the
-#:   write_inverted_index STATIC-overwrite fix (under the session's
-#:   dynamic mode, a rebuild over a shrunken corpus kept GHOST postings
-#:   in buckets the new corpus no longer touched — found by the index
-#:   roundtrip property) and the empty-index typed-read fallback; the
-#:   gate builds one fresh index in a fresh dir, output identical,
-#:   re-verified exact.
-CHANGED_R10_SPILL: tuple[str, ...] = (
-    "acid_snapshot_isolation",
-    "acid_merge_on_read_delete",
-    "acid_hidden_partition_prune",
-    "mv_incremental_refresh",
-    "web_domain_policy_rollup",
-    "text_index_search",
-)
-
-#: Also changed in r10 (output identical, re-verified exact) but NOT
-#: spilled to r11: upsert_partitioned_merge / stream_upsert_merge_equiv
-#: ride writers.upsert_partitioned, whose partition-swap now addresses
-#: directories by Spark's HIVE-ESCAPED names (r10 review: raw-value names
-#: silently mis-merged any partition value containing ':', '=', '%', ... —
-#: staged rows dropped, replaced keys kept; the gates use integer
-#: partition values).  The same pair also rides the late-r10 NULL-SAFE
-#: survivor predicate fix (a plain `col == NULL` scanned ZERO survivors
-#: out of the NULL partition while the swap still replaced its directory —
-#: silent row loss, found by the random-commit property in
-#: tests/test_scale_ops.py; gate data has no NULL partitions, output
-#: identical, both re-verified exact post-fix).  Spilling them would push the r11 lead block past
-#: 50 - |r6 tier| slots and bump an r6-green entry to staleness 6 — so
-#: they re-enter via the NATURAL r7-tier rotation in r12 (their own
-#: staleness lands exactly at the 5-round ceiling; the staleness
-#: simulation test pins this), and their exact oracles keep running in
-#: every local pytest meanwhile.
-#: stat_chi2_type_weekday / stat_welch_view_click ride the r10 stats.py
-#: exact-DECIMAL promotion of the chi2 marginal product and welch's n*n
-#: (BIGINT overflow at multi-billion-row classes — r10 review); both
-#: r7-green, output identical, re-verified exact — same natural-r12
-#: scheduling argument as the upsert pair.
-#: text_bigram_pmi / text_bigram_lm_nll / text_kn_bigram_nll ride the r10
-#: _lm_tokens fix (empty tokens dropped before pairing, oracles updated in
-#: LOCKSTEP — on the single-spaced gate corpus output is identical,
-#: re-verified exact; a model property pins the multi-space behavior).
-#: The four privacy gates ride the late-r10 privacy.py hardening (all
-#: r9-green, output identical on the clean-keyed gate corpus, all four
-#: re-verified exact post-fix):
-#: - k_anonymize / l_diversify / t_closeness_release suppression and
-#:   distribution joins are now NULL-SAFE (groupBy puts all NULL quasi
-#:   values in ONE class, but the name-list anti-join matched with plain
-#:   equality — a NULL-keyed VIOLATING class leaked through the release;
-#:   found by the privacy-ladder model property);
-#: - dp_noisy_counts hash inputs are per-column escaped to be INJECTIVE
-#:   (raw ':'-joining let distinct keys share one Laplace draw — the
-#:   difference of their noisy counts was exact; the escape is the
-#:   identity on '~'/':'-free non-NULL keys, so the draw is unchanged).
-#: events_session_30min rides the late-r10 session-gap boundary fix on
-#: its ORACLE only (>= broke at exactly prev+gap where Spark MERGES —
-#: found by the session boundary-tie property; microsecond corpus has no
-#: exact 30-min ties, output identical, re-verified exact).
-#: stat_spearman_len_diversity / stat_gini_priority_revenue ride the
-#: late-r10 COMPLETE-CASE fix in stats.py (NULL-bearing rows used to be
-#: ranked — shifting survivors' ranks — then silently dropped by the
-#: null-unsafe rank join; Gini even counted NULLs into n while F.sum
-#: skipped them, and the engines rank NULLs on opposite ends).  Both
-#: r9-green, gate corpora NULL-free, output identical, re-verified
-#: exact — same natural-rotation treatment as the privacy gates above.
-#: events_funnel_conversion / events_cohort_retention /
-#: events_rolling_wau_7d / events_quantile_outliers /
-#: timeseries_gapfill_ffill / join_interval_overlap_promo gained model
-#: properties with NO code change (nothing to re-enter).
-#: The four privacy gates and events_session_30min are NOT force-scheduled:
-#: they sit on FRESH r9-green rows, so their natural stalest-first slot is
-#: r14 (staleness exactly 5, inside the ceiling — forcing them into r12
-#: would bump five stale-tier entries past it, which the staleness
-#: simulation test rejects), and their exact oracles run in every local
-#: pytest via test_oracle_parity meanwhile.
-#: The r9-green entries here would not surface in r12's stalest-first fill
-#: on their own — the r12 builder MUST pass them as changed= re-entries
-#: (the staleness simulation test already does, so forgetting fails CI).
-CHANGED_R10_TO_R12: tuple[str, ...] = (
-    "upsert_partitioned_merge",
-    "stream_upsert_merge_equiv",
-    "stat_chi2_type_weekday",
-    "stat_welch_view_click",
-    "text_bigram_pmi",
-    "text_bigram_lm_nll",
-    "text_kn_bigram_nll",
-)
-
-#: Queries REGISTERED in round 10 (the registry freeze admits gap-fills
-#: only): the AVI video tier's oracle gates, closing the r9 verdict's
-#: "pytest-only video codec" gap.  NEW queries lead the NEXT round's
-#: window per the rotation contract (they are exact-oracled locally from
-#: day one via tests/test_oracle_parity.py).
-NEW_R10: tuple[str, ...] = (
-    "media_avi_meta",
-    "media_avi_frame_features",
-)
-
-# DRIVER_PRIORITY is assigned below, after R11_WINDOW (the active round-11
-# window) is defined — the r10 driver graded R10_WINDOW 50/50 green
-# (CORRECTNESS_r10.json, test-enforced), so the rotation advances.
-
-#: Round-10 deferral tiers (policy clause 4 accounting): everything not
-#: in the active window and not green last round (R9_WINDOW), partitioned
-#: by the age of its newest green driver row.  Every entry still runs its
-#: exact oracle in every local pytest (tests/test_oracle_parity.py).
-DEFERRED_R10_R6: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R9_R6 if n not in R10_WINDOW
-)  # 41 r6-green entries -> they lead the r11 window after NEW_R10
-DEFERRED_R10_R7: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R9_R7 if n not in R10_WINDOW
-)  # r7-green entries (the two r7-tier sketch spills re-entered)
-DEFERRED_R10_R8: tuple[str, ...] = tuple(
-    n for n in R8_WINDOW if n not in R10_WINDOW and n not in R9_WINDOW
-)  # r8-green entries (acid gates re-graded r9; sketch spills in r10)
-
-DEFERRED_R10: tuple[str, ...] = (
-    DEFERRED_R10_R6 + DEFERRED_R10_R7 + DEFERRED_R10_R8
-)
-
-#: PRECOMPUTED ROUND-11 WINDOW (do NOT assign to DRIVER_PRIORITY before
-#: the round-10 driver grades the current window): the NEW_R10 gap-fills
-#: lead (never-graded), then the CHANGED_R10_SPILL re-entries
-#: (output-identical r10 code changes on fresh r9 rows), then the
-#: remaining r6-green entries (stalest tier, alphabetical), then the
-#: alphabetically-first r7-green fill.  The r11 builder's first act
-#: should be ``DRIVER_PRIORITY = R11_WINDOW`` plus re-appending any
-#: r11-changed queries and any r10 driver failures per the rotation
-#: contract above.
-R11_WINDOW: tuple[str, ...] = (
-    NEW_R10
-    + CHANGED_R10_SPILL
-    + tuple(sorted(DEFERRED_R10_R6))
-    + tuple(sorted(DEFERRED_R10_R7))
-)[:50]
-
-#: Driver failures from round 10: none — CORRECTNESS_r10.json is 50/50
-#: green (verified by tests/test_registry_order.py against the artifact).
-FAILED_R10: tuple[str, ...] = ()
-
-#: Entries whose implementation changed in ROUND 11 (output proven
-#: identical in the driver sim) — append as code changes land:
-#: - stream_multibatch_totals_equiv / stream_stateful_totals_equiv ride
-#:   stateful_running_totals' int64-wrap fix (ADVICE r10 info item:
-#:   per-batch sums now accumulate as arbitrary-precision Python ints, so
-#:   a true running total past int64 fails LOUDLY at the long-typed state
-#:   serialization instead of silently emitting the numpy-wrapped value).
-#:   The gates' cent totals sit ~9 orders below the bound; output
-#:   identical, re-verified exact.  multibatch already holds an r11 slot
-#:   (r6 tier); stateful is r8-green and re-enters via changed= in R12
-#:   (the full r11 window cannot absorb it — same precedent as
-#:   CHANGED_R10_TO_R12, simulation-test-enforced below).
-#:   The same pair ALSO rides the late-r11 timeout-deadline CLAMP: the
-#:   r11 timeout-model probes found that a straggler key (newest
-#:   surviving event > one delay behind the stream head) produced an
-#:   event-time timeout at/behind the watermark, which Spark rejects
-#:   (INVALID_TIMEOUT_TIMESTAMP) — one slow source partition killed the
-#:   whole query.  The deadline now clamps one ms past the current
-#:   watermark; the gates' single/4-batch replays never time out at all,
-#:   output identical, both re-verified exact post-fix.
-#: - text_index_search rides the read_postings_for error-class narrowing
-#:   (PATH_NOT_FOUND now raises; ONLY UNABLE_TO_INFER_SCHEMA reads as the
-#:   typed empty index) and write_inverted_index's integral-doc_id
-#:   contract (ADVICE r10 items 1-2).  The gate builds a valid long-id
-#:   index in a fresh dir; output identical, re-verified exact.  Already
-#:   leads the r11 window via CHANGED_R10_SPILL.
-#: write_zordered was REBUILT in r11 on exact equi-depth z-boundaries +
-#: collision-free murmur3 routing (r10 verdict item 2: sampled
-#: repartitionByRange boundaries drifted with input layout, silently
-#: degenerating file skipping to zero) — but NO registered gate calls the
-#: writer (layout_zorder_orders verifies the morton-code math only), so
-#: nothing re-enters for it; layout determinism is pinned by
-#: tests/test_scale_ops.py's cross-input-layout equality test.
-#: - sim_power_iteration_pc1 rides the late-r11 collapsed-iteration
-#:   guard in operators/similarity.power_iteration_pc1: an iteration
-#:   whose surviving y vector is exactly zero (degenerate gram) divided
-#:   by max|y| = 0 — an ANSI DIVIDE_BY_ZERO that killed the whole job,
-#:   found when the r10 PC1 model property drew a degenerate gram in
-#:   r11.  The zero vector is now normalized to explicitly; the gate's
-#:   real-embedding gram never collapses, output identical, re-verified
-#:   exact.  It already holds an R12 slot via the natural r7-tier drain.
-CHANGED_R11: tuple[str, ...] = (
-    "stream_multibatch_totals_equiv",
-    "stream_stateful_totals_equiv",
-    "text_index_search",
-    "sim_power_iteration_pc1",
-)
-
-# DRIVER_PRIORITY is assigned below, after R12_WINDOW (the active round-12
-# window) is defined — the r11 driver graded R11_WINDOW 50/50 green
-# (CORRECTNESS_r11.json, test-enforced), so the rotation advances.
-
-#: Round-11 deferral tiers (policy clause 4 accounting): everything not
-#: in the active window and not green last round (R10_WINDOW), by age of
-#: newest green driver row.  The r6 tier drained completely into
-#: R11_WINDOW; the stalest survivors are r7-green.  Every entry still
-#: runs its exact oracle in every local pytest (test_oracle_parity).
-DEFERRED_R11_R7: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R10_R7 if n not in R11_WINDOW
-)
-DEFERRED_R11_R8: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R10_R8 if n not in R11_WINDOW and n not in R10_WINDOW
-)
-DEFERRED_R11_R9: tuple[str, ...] = tuple(
-    n
-    for n in R9_WINDOW
-    if n not in R11_WINDOW and n not in R10_WINDOW
-)
-
-DEFERRED_R11: tuple[str, ...] = (
-    DEFERRED_R11_R7 + DEFERRED_R11_R8 + DEFERRED_R11_R9
-)
-
-#: PRECOMPUTED ROUND-12 WINDOW (r10 verdict stretch task: keep the
-#: rotation mechanical one round ahead).  Mandatory changed= re-entries
-#: lead: the seven CHANGED_R10_TO_R12 entries (r10 code fixes whose
-#: re-grades could not fit the full r11 window) plus the r11-changed
-#: stream_stateful_totals_equiv; then stalest-first fill — the remaining
-#: r7-green tier drains, then the alphabetically-first r8-green entries.
-#: The r12 builder's first act: ``DRIVER_PRIORITY = R12_WINDOW`` plus
-#: re-appending any r12-changed queries and any r11 driver failures.
-R12_WINDOW: tuple[str, ...] = (
-    CHANGED_R10_TO_R12
-    + ("stream_stateful_totals_equiv",)
-    + tuple(
-        sorted(
-            n
-            for n in DEFERRED_R11_R7
-            if n not in CHANGED_R10_TO_R12
-        )
-    )
-    + tuple(
-        sorted(
-            n
-            for n in DEFERRED_R11_R8
-            if n not in CHANGED_R10_TO_R12
-            and n != "stream_stateful_totals_equiv"
-        )
-    )
-)[:50]
-
-#: Driver failures from round 11: none — CORRECTNESS_r11.json is 50/50
-#: green (verified by tests/test_registry_order.py against the artifact).
-FAILED_R11: tuple[str, ...] = ()
-
-#: Entries whose implementation changed in ROUND 12 (output proven
-#: identical in the driver sim) — append as code changes land:
-#: - text_index_search rides the r12 layout-sidecar contract in
-#:   operators/textindex.py (r11 verdict residue): write_inverted_index
-#:   now persists ``_index_meta.json`` (layout / n_buckets / schema) and
-#:   read_postings_for validates the caller against it — a mismatched
-#:   layout or bucket count raises instead of silently mispruning, and the
-#:   empty-index fallback takes its schema from the sidecar instead of
-#:   fabricating one from the caller's layout arg.  The gate's build+read
-#:   agree with the sidecar by construction; output identical, re-verified
-#:   exact.  Freshly r11-green, so it re-enters ONLY via changed= here.
-CHANGED_R12: tuple[str, ...] = ("text_index_search",)
-
-#: Also changed in r12 (output identical) but NOT force-scheduled into the
-#: r12 window: sim_topk_ivf rides the ivf_topk n_probe clamp (a corpus
-#: smaller than n_cells trains fewer centroids than requested, and
-#: probe_gen's repeat(n_probe) id column then mismatches the [:, :n_probe]
-#: ranking slice inside the Arrow batch — ValueError, whole job dead;
-#: found by the r12 full-probe recall-floor property).  The gate's
-#: embeddings corpus (>=500 rows at every graded sf) trains all 16 cells,
-#: so the clamp is a no-op there — output identical, re-verified exact.
-#: Forcing it into r12 would displace an r7-green fill entry to staleness
-#: 6 (the ceiling is 5) — the same arithmetic that deferred the upsert
-#: pair past r11 — and it is r8-green, so it ALREADY holds a natural slot
-#: in the r13 stalest-first drain (pinned: the r13-precompute test asserts
-#: membership).  Its exact oracle keeps running in every local pytest.
-CHANGED_R12_TO_R13: tuple[str, ...] = ("sim_topk_ivf",)
-
-#: ACTIVE ROUND-12 WINDOW: the precomputed R12_WINDOW plus the r12
-#: changed-code re-entries per the rotation contract (changed entries
-#: preempt; r11 had zero driver failures).  Prepending text_index_search
-#: displaces exactly the 50th precomputed slot — agg_approx_profile, the
-#: alphabetically-first r8-green fill entry — which leads the r13
-#: stalest-first fill instead (graded r13 at staleness exactly 5, the
-#: ceiling; the staleness simulation test pins this).  The executable
-#: policy agrees: compute_window(changed=CHANGED_R10_TO_R12 +
-#: stream_stateful_totals_equiv + sim_power_iteration_pc1 + CHANGED_R12)
-#: returns exactly this set.
-R12_ACTIVE: tuple[str, ...] = (
-    tuple(n for n in CHANGED_R12 if n not in R12_WINDOW) + R12_WINDOW
-)[:50]
-
-# DRIVER_PRIORITY is assigned below, after R13_WINDOW (the active round-13
-# window) is defined — the r12 driver graded R12_ACTIVE 50/50 green
-# (CORRECTNESS_r12.json, test-enforced), so the rotation advances.
-
-#: Round-12 deferral tiers (policy clause 4 accounting): everything not
-#: in the active window and not green last round (R11_WINDOW), by age of
-#: newest green driver row.  The r7 tier drains COMPLETELY into the r12
-#: window (after r12, no query's newest grade predates r8).  Every entry
-#: still runs its exact oracle in every local pytest (test_oracle_parity).
-DEFERRED_R12_R8: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R11_R8 if n not in R12_ACTIVE
-)
-DEFERRED_R12_R9: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R11_R9 if n not in R12_ACTIVE
-)
-DEFERRED_R12_R10: tuple[str, ...] = tuple(
-    n
-    for n in R10_WINDOW
-    if n not in R12_ACTIVE and n not in R11_WINDOW
-)
-
-DEFERRED_R12: tuple[str, ...] = (
-    DEFERRED_R12_R8 + DEFERRED_R12_R9 + DEFERRED_R12_R10
-)
-
-#: PRECOMPUTED ROUND-13 WINDOW (keep the rotation mechanical one round
-#: ahead): no mandatory re-entries are known yet (r12 failures and
-#: r13-changed code don't exist until they happen), so the window is the
-#: pure stalest-first fill — the ENTIRE remaining r8-green tier (47
-#: entries, including the displaced agg_approx_profile) drains, then the
-#: alphabetically-first r9-green entries fill the last 3 slots.  The r13
-#: builder's first act: ``DRIVER_PRIORITY = R13_WINDOW`` plus re-appending
-#: any r13-changed queries and any r12 driver failures.
-R13_WINDOW: tuple[str, ...] = (
-    tuple(sorted(DEFERRED_R12_R8)) + tuple(sorted(DEFERRED_R12_R9))
-)[:50]
-
-#: Driver failures from round 12: none — CORRECTNESS_r12.json is 50/50
-#: green (verified by tests/test_registry_order.py against the artifact).
-FAILED_R12: tuple[str, ...] = ()
-
-#: Entries whose implementation or oracle changed in ROUND 13 (output
-#: proven identical in the driver sim) — append as code changes land.
-#: Changed entries already holding an R13_WINDOW slot (e.g. the pinned
-#: sim_topk_ivf re-grade) need no prepend; entries NOT in the window
-#: preempt the tail fill slots, displacing them to the r14 stalest-first
-#: drain (the displaced r9-green entries land at staleness exactly 5, the
-#: ceiling — the agg_approx_profile precedent).
-#: - text_index_search rides the r13 textindex.py changes (ADVICE r12:
-#:   atomic sidecar write via temp+rename, typed corrupt-sidecar error;
-#:   VERDICT task 3: string doc-id support via portable-hash bucket
-#:   routing).  The gate's long-id build is byte-identical under the new
-#:   writer; output identical, re-verified exact.  r12-green, so it
-#:   re-enters ONLY via changed= here.
-#: - corpus_curation_funnel rides the r13 curation-stage extensions
-#:   (VERDICT tasks 5-6: HTML boilerplate extraction + Unicode/mojibake
-#:   normalization now run upstream of the Gopher rules inside the
-#:   funnel); its oracle changed in lockstep.  r10-green, displaced-slot
-#:   arithmetic identical to the textindex entry.  Late-r13 it ALSO rides
-#:   webtext's explicit-whitespace-class fix (an adversarial-markup fuzz
-#:   found the twins diverging on U+00A0: DuckDB trim strips Zs, Spark's
-#:   does not; both sides now squeeze one shared class, spec+oracle in
-#:   lockstep via the sql_* builders) — re-simmed exact, as were
-#:   text_extract_main_content / text_unicode_sanitize (NEW_R13, first
-#:   graded r14 on this code).
-#: - dedup_cluster_canonical rides the r13 connected_components
-#:   empty-edge-set guard (operators/graph.py: the change detector's SUM
-#:   over zero label rows is NULL, so a legitimately edge-free pair stage
-#:   — a clean shard — burned max_iter rounds and raised "did not
-#:   converge"; found by the web-funnel composition test).  The gate's
-#:   corpus always yields near-dup edges at every graded sf, so the guard
-#:   is a no-op there — output identical, re-verified exact.  r11-green;
-#:   its prepend displaces the third tail fill slot (ann_hard_negatives,
-#:   r9-green -> r14 at staleness exactly 5, the ceiling).
-#: - roundtrip_partitioned_agg rides compact_partitions' r13 fixes
-#:   (sources/writers.py: NULL-SAFE budget join — a plain equi-join
-#:   silently dropped every __HIVE_DEFAULT_PARTITION__ row from the
-#:   rewrite, deleting them from the table; plus the all-NULL partition
-#:   column VOID-type normalization; both found by the r13 upsert x
-#:   compact interplay property).  The gate's o_year partitions are never
-#:   NULL, so both fixes are no-ops there — output identical, re-verified
-#:   exact.  It ALREADY holds a natural R13_WINDOW slot (r8 tier), so the
-#:   prepend filter below leaves the window order untouched.
-CHANGED_R13: tuple[str, ...] = (
+# The round driver grades only the first 50 ``queries()`` entries; this
+# tuple is that window, edited by hand.  Every other registered query
+# follows in registration order.
+DRIVER_PRIORITY: tuple[str, ...] = (
     "text_index_search",
     "corpus_curation_funnel",
     "dedup_cluster_canonical",
+    "agg_approx_profile",
+    "agg_cube_flag_status",
+    "agg_distinct_percentiles",
+    "agg_grouping_sets_sql",
+    "agg_rollup_status_priority",
+    "conditional_round",
+    "date_parts_cast",
+    "dedup_exact",
+    "dedup_incremental_new_docs",
+    "distinct_pairs",
+    "events_json_typed_parse",
+    "events_rollup_type_user",
+    "events_session_30min",
+    "events_sliding_10min_5min",
+    "events_tumbling_10min",
+    "global_count",
+    "graph_degree_distribution",
+    "join_asof_prev_low_order",
+    "join_full_nation_activity",
+    "join_left_customer_orders",
+    "join_range_price_bands",
+    "join_semi_urgent_customers",
+    "keyed_stats_single",
+    "null_filter_project",
+    "refined_detail_lag",
+    "rename_literal_hyphen",
     "roundtrip_partitioned_agg",
+    "set_nations_except",
+    "set_nations_except_all",
+    "set_nations_intersect",
+    "set_nations_intersect_all",
+    "sim_topk_ivf",
+    "sim_topk_ivfpq",
+    "sim_topk_lsh",
+    "sim_topk_pq",
+    "skew_salted_agg",
+    "sort_limit_topn",
+    "sql_athena_canonical",
+    "sql_hint_broadcast_join",
+    "stream_dedup_equiv",
+    "stream_sliding_10min_5min_equiv",
+    "text_top_sources_with_other",
+    "union_all_sources",
+    "unpivot_lineitem_measures",
+    "window_lead_first_last_ntile",
+    "window_rank_top3_orders",
+    "window_rolling_7row_avg",
 )
-
-#: Changed in r13 (output identical, re-verified exact) but NOT
-#: force-scheduled into the r13 window — every additional prepend past
-#: CHANGED_R13 would displace an r8-green fill entry to staleness 6, past
-#: the ceiling.  Same arithmetic that deferred sim_topk_ivf past r12
-#: (CHANGED_R12_TO_R13); all three are r12-green (the freshest riders of
-#: their respective r13 fixes), hold PINNED slots in R14_WINDOW below
-#: (the precompute test asserts membership), and their exact oracles keep
-#: running in every local pytest.
-#: - corpus_cluster_split rides the connected_components empty-edge guard
-#:   (see CHANGED_R13's dedup_cluster_canonical note).
-#: - upsert_partitioned_merge / stream_upsert_merge_equiv ride
-#:   upsert_partitioned's crash-recovery-first fix (sources/writers.py):
-#:   a crash between rename-aside and swap-in left a partition's
-#:   pre-merge rows ONLY in the backup dir, and the next run deleted the
-#:   backup before staging — re-running the same batch silently lost the
-#:   partition's unmatched survivor rows (found by the r13 upsert-crash
-#:   property, red before / green after).  Both gates run on fresh
-#:   directories with no crash artifacts, so recovery is a no-op there —
-#:   output identical, re-verified exact.
-CHANGED_R13_TO_R14: tuple[str, ...] = (
-    "corpus_cluster_split",
-    "upsert_partitioned_merge",
-    "stream_upsert_merge_equiv",
-)
-
-#: Queries REGISTERED in round 13 (the registry freeze admits gap-fills
-#: only; these two are VERDICT r12 tasks 5-6): the LLM-curation web-text
-#: hygiene stages.  NEW queries lead the NEXT round's window per the
-#: rotation contract (exact-oracled locally from day one).
-NEW_R13: tuple[str, ...] = (
-    "text_extract_main_content",
-    "text_unicode_sanitize",
-)
-
-#: ACTIVE ROUND-13 WINDOW: the precomputed R13_WINDOW plus the r13
-#: changed-code re-entries per the rotation contract (changed entries
-#: preempt; r12 had zero driver failures).  Prepending the three
-#: CHANGED_R13 entries displaces the three precomputed tail fill slots
-#: (ann_hard_negatives, corpus_dsir_weights, corpus_epoch_shuffle — all
-#: r9-green), which lead the r14 stalest-first fill instead and are graded
-#: there at staleness exactly 5, the ceiling (the staleness simulation
-#: test pins this).  The executable policy agrees:
-#: compute_window(changed=CHANGED_R13) over the post-r12 green map returns
-#: exactly this set.
-DRIVER_PRIORITY: tuple[str, ...] = (
-    tuple(n for n in CHANGED_R13 if n not in R13_WINDOW) + R13_WINDOW
-)[:50]
-
-#: Round-13 deferral tiers (policy clause 4 accounting): everything not
-#: in the active window and not green last round (R12_ACTIVE), by age of
-#: newest green driver row.  The r8 tier drains COMPLETELY into the r13
-#: window (after r13, no query's newest grade predates r9).  Every entry
-#: still runs its exact oracle in every local pytest (test_oracle_parity).
-DEFERRED_R13_R9: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R12_R9 if n not in DRIVER_PRIORITY
-)
-DEFERRED_R13_R10: tuple[str, ...] = tuple(
-    n for n in DEFERRED_R12_R10 if n not in DRIVER_PRIORITY
-)
-DEFERRED_R13_R11: tuple[str, ...] = tuple(
-    n
-    for n in R11_WINDOW
-    if n not in DRIVER_PRIORITY and n not in R12_ACTIVE
-)
-
-DEFERRED_R13: tuple[str, ...] = (
-    DEFERRED_R13_R9 + DEFERRED_R13_R10 + DEFERRED_R13_R11
-)
-
-#: PRECOMPUTED ROUND-14 WINDOW (keep the rotation mechanical one round
-#: ahead): the NEW_R13 gap-fills lead (never-graded), then the PINNED
-#: CHANGED_R13_TO_R14 re-grade (corpus_cluster_split — the deferred CC
-#: guard re-entry), then the pure stalest-first fill — the ENTIRE
-#: remaining r9-green tier drains (including the three displaced
-#: CHANGED_R13 casualties at staleness exactly 5), then the
-#: alphabetically-first r10-green entries fill.  The r14 builder's first
-#: act: ``DRIVER_PRIORITY = R14_WINDOW`` plus re-appending any
-#: r14-changed queries and any r13 driver failures.
-R14_WINDOW: tuple[str, ...] = (
-    NEW_R13
-    + CHANGED_R13_TO_R14
-    + tuple(sorted(DEFERRED_R13_R9))
-    + tuple(sorted(DEFERRED_R13_R10))
-)[:50]
-
-
-# ---------------------------------------------------------------------------
-# Tiering policy AS CODE (r9 verdict task 5): the window scheduler the
-# comments describe, executable so tests can simulate future rounds
-# instead of trusting prose.  Given the newest-green-round map, it returns
-# the set of queries the round-N window must grade:
-#   1. failures from round N-1 re-enter;
-#   2. changed-code/oracle entries re-enter;
-#   3. never-graded (NEW) entries enter;
-#   4. remaining slots go stalest-first (oldest green round), with
-#      alphabetical tiebreak inside a tier.
-# Ordering WITHIN the window (who leads) is presentation; membership is
-# the contract — tests assert set-equality against the pinned windows and
-# simulate rounds forward to prove max staleness stays <= MAX_STALENESS.
-# ---------------------------------------------------------------------------
-
-WINDOW_SLOTS = 50
-#: Worst-case rounds between green rows at 236 queries / 50 slots.
-MAX_STALENESS = 5
-
-
-def compute_window(
-    last_green: dict[str, int],
-    *,
-    failed: tuple[str, ...] = (),
-    changed: tuple[str, ...] = (),
-    new: tuple[str, ...] = (),
-    slots: int = WINDOW_SLOTS,
-) -> set[str]:
-    """The rotation policy, executable: mandatory re-entries (failures,
-    changed code, never-graded) plus stalest-first fill."""
-    window: list[str] = []
-    for name in (*failed, *changed, *new):
-        if name not in window:
-            window.append(name)
-    pool = sorted(
-        (n for n in last_green if n not in window),
-        key=lambda n: (last_green[n], n),
-    )
-    window.extend(pool[: max(0, slots - len(window))])
-    return set(window[:slots])
 
 
 def _ordered() -> list[str]:
@@ -992,8 +124,4 @@ def queries() -> dict[str, SparkQuery]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: REGISTRY[name].oracle for name in _ordered()}

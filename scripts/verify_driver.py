@@ -1,7 +1,7 @@
 """Driver-protocol simulation: vanilla SparkSession + __spark_entry__ vs DuckDB.
 
 Mirrors the round driver's correctness gate: for every query in
-__spark_entry__.queries() that has an oracle_sql() entry, run both at sf0.01,
+__spark_entry__.queries() (each has an oracle_sql() entry), run both at sf0.01,
 sort columns by name, sort rows, compare str()-ized cells EXACTLY.
 
 Usage: python scripts/verify_driver.py [--only name1,name2] [--sf DIR]
@@ -62,7 +62,7 @@ def main():
 
     queries = e.queries()
     oracles = e.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     failures = []
     for name, fn in queries.items():
         if only and name not in only:
@@ -76,10 +76,6 @@ def main():
             print(f"FAIL {name}: spark raised {ex!r}", flush=True)
             n_fail += 1
             failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(srows)} rows ({time.time()-t0:.1f}s)", flush=True)
-            n_rows_only += 1
             continue
         try:
             res = con.execute(oracles[name])
@@ -110,7 +106,7 @@ def main():
                     print(f"  first diff row {i}:\n    spark={x}\n    duck ={y}")
                     break
 
-    print(f"\nSUMMARY: {n_pass} exact, {n_rows_only} rows-only, {n_fail} FAIL")
+    print(f"\nSUMMARY: {n_pass} exact, {n_fail} FAIL")
     if failures:
         print("failures:", ",".join(failures))
         sys.exit(1)

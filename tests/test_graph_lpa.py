@@ -5,6 +5,8 @@ the community-boundary behavior that separates it from min-label components.
 
 from collections import Counter
 
+import pytest
+
 from aws_etl_fiap_spark.operators.graph import label_propagation_communities
 
 
@@ -293,5 +295,27 @@ def test_pagerank_many_iters_bounded_plan(spark):
     assert len(ranks) == 5
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     # symmetric complete graph: uniform fixpoint
+    for v in ranks.values():
+        assert abs(v - 0.2) < 1e-12
+
+
+@pytest.mark.parametrize(
+    "iters, broadcast_ranks", [(20, None), (3, False)], ids=["broadcast", "shuffle"]
+)
+def test_pagerank_releases_superseded_rank_pins(spark, iters, broadcast_ranks):
+    """Only e, deg and the last rank pin stay cached after a call: every
+    earlier rank pin is released once the next one has materialized (the
+    broadcast path pins every 8th round, the shuffle path every round)."""
+    from aws_etl_fiap_spark.operators.graph import pagerank
+
+    e = [(a, b) for a in range(1, 6) for b in range(1, 6) if a != b]
+    df = spark.createDataFrame(e, "src long, dst long")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = pagerank(df, iters=iters, broadcast_ranks=broadcast_ranks)
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(new) <= 3, f"{len(new)} cached RDDs left by pagerank"
+    ranks = {r["id"]: r["pr"] for r in out.collect()}
+    assert len(ranks) == 5
     for v in ranks.values():
         assert abs(v - 0.2) < 1e-12

@@ -1,95 +1,36 @@
 """Driver-window ordering invariants.
 
-The round driver grades only the first 50 ``queries()`` entries (rounds 1-9
-evidence: every CORRECTNESS_r*.json covers exactly the first 50 in
-registration order).  These tests pin the ROTATION POLICY itself
-(registry.py's rotation section), not a hand-copied family list — the
-round-4/round-5 red test failed precisely because it hardcoded "all
-tpch_/text_/media_ inside" after the policy had deliberately displaced four
-TPC-H entries:
-
-* a query whose code or oracle changed this round occupies a graded slot;
-* a query the driver FAILED last round occupies a graded slot;
-* remaining slots go stalest-first (never-graded, then oldest green row);
-* every registered query is accounted for: graded this round, green last
-  round, a documented deferral, or a NEW entry leading the next window;
-* deferrals never include changed code or last round's failures;
-* the policy itself is executable (registry.compute_window) and a forward
-  simulation proves max staleness stays <= registry.MAX_STALENESS rounds.
+The round driver grades only the first 50 ``queries()`` entries.
+``registry.DRIVER_PRIORITY`` is that window, edited by hand; every other
+registered query follows in registration order.  These tests pin the rule,
+not the names: a hand edit of the tuple that keeps it 50 unique, registered
+and oracled names passes.
 """
-
-import json
-import os
 
 from aws_etl_fiap_spark.queries import registry
 
 DRIVER_WINDOW = 50
 
 
-def _failed_r9() -> tuple:
-    """FAILED_R9 is pinned empty in registry.py; prove it against the
-    artifact instead of trusting the comment."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r09.json")
-    with open(path) as fh:
-        graded = json.load(fh)
-    return tuple(
-        sorted(n for n, row in graded.items() if not row.get("hash_match"))
-    )
-
-
-def _names():
-    from aws_etl_fiap_spark import queries  # noqa: F401  (populate REGISTRY)
-
+def _names() -> list[str]:
     return list(registry.queries())
 
 
-def _window():
-    return set(_names()[:DRIVER_WINDOW])
-
-
-def _last_green() -> dict:
-    """Newest green driver round per query, rebuilt from the pinned tier
-    data (later windows overwrite earlier tiers).  NEW_R10 entries have no
-    green row yet (round 0 = never graded)."""
-    last = {}
-    for rnd, block in (
-        (5, registry.DEFERRED_R8_R5),
-        (6, registry.DEFERRED_R8_R6),
-        (7, registry.R7_WINDOW),
-        (8, registry.R8_WINDOW),
-        (9, registry.R9_WINDOW),
-    ):
-        for n in block:
-            last[n] = max(last.get(n, 0), rnd)
-    for n in registry.NEW_R10:
-        last.setdefault(n, 0)
-    return last
-
-
-def test_failed_r9_matches_artifact():
-    assert _failed_r9() == registry.FAILED_R9 == ()
-
-
-def _failed_r10() -> tuple:
-    """FAILED_R10 is pinned empty in registry.py; prove it against the
-    CORRECTNESS_r10.json artifact instead of trusting the comment."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r10.json")
-    with open(path) as fh:
-        graded = json.load(fh)
-    return tuple(
-        sorted(n for n, row in graded.items() if not row.get("hash_match"))
-    )
-
-
-def test_failed_r10_matches_artifact():
-    assert _failed_r10() == registry.FAILED_R10 == ()
+def test_window_is_exactly_full():
+    """Fewer than 50 names wastes graded slots on registration order; more
+    are silently cut off by the driver."""
+    assert len(registry.DRIVER_PRIORITY) == DRIVER_WINDOW
+    assert len(set(registry.DRIVER_PRIORITY)) == DRIVER_WINDOW
 
 
 def test_priority_names_all_registered():
-    names = _names()
-    assert set(registry.DRIVER_PRIORITY) <= set(names)
-    assert set(registry.NEW_R10) <= set(names), "NEW_R10 names not registered"
-    assert set(registry.NEW_R13) <= set(names), "NEW_R13 names not registered"
+    assert set(registry.DRIVER_PRIORITY) <= set(registry.REGISTRY)
+
+
+def test_queries_order_is_priority_then_registration():
+    assert _names() == list(registry.DRIVER_PRIORITY) + [
+        n for n in registry.REGISTRY if n not in registry.DRIVER_PRIORITY
+    ]
 
 
 def test_no_query_lost_or_duplicated():
@@ -98,410 +39,8 @@ def test_no_query_lost_or_duplicated():
     assert set(names) == set(registry.REGISTRY)
 
 
-def _failed_r11() -> tuple:
-    """FAILED_R11 is pinned empty in registry.py; prove it against the
-    CORRECTNESS_r11.json artifact instead of trusting the comment."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r11.json")
-    with open(path) as fh:
-        graded = json.load(fh)
-    return tuple(
-        sorted(n for n, row in graded.items() if not row.get("hash_match"))
-    )
-
-
-def test_failed_r11_matches_artifact():
-    assert _failed_r11() == registry.FAILED_R11 == ()
-
-
-def _failed_r12() -> tuple:
-    """FAILED_R12 is pinned empty in registry.py; prove it against the
-    CORRECTNESS_r12.json artifact instead of trusting the comment."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r12.json")
-    with open(path) as fh:
-        graded = json.load(fh)
-    return tuple(
-        sorted(n for n, row in graded.items() if not row.get("hash_match"))
-    )
-
-
-def test_failed_r12_matches_artifact():
-    assert _failed_r12() == registry.FAILED_R12 == ()
-
-
-def test_window_is_exactly_full():
-    """DRIVER_PRIORITY should pin the whole 50-slot window: fewer wastes
-    graded slots on arbitrary registration order, more silently truncates.
-    The active r13 window is the precomputed R13_WINDOW with the r13
-    changed-code re-entries prepended (displacing the two tail fill
-    slots)."""
-    assert len(registry.DRIVER_PRIORITY) == DRIVER_WINDOW
-    assert len(set(registry.DRIVER_PRIORITY)) == DRIVER_WINDOW
-    prepended = tuple(
-        n for n in registry.CHANGED_R13 if n not in registry.R13_WINDOW
-    )
-    assert registry.DRIVER_PRIORITY == (
-        prepended + registry.R13_WINDOW
-    )[:DRIVER_WINDOW]
-
-
-def test_changed_queries_inside_driver_window():
-    """Policy clause 1: changed implementation/oracle => graded slot.
-    The r13-changed entries (textindex atomic-sidecar/string-id work and
-    the curation-funnel composition) and the pinned r12-deferred
-    sim_topk_ivf re-grade ALL occupy graded slots this round — after r13,
-    no query's code is newer than its newest official driver grade."""
-    w = _window()
-    must = (*registry.CHANGED_R13, *registry.CHANGED_R12_TO_R13)
-    missing = [n for n in must if n not in w]
-    assert not missing, f"changed-code queries outside window: {missing}"
-
-
-def test_failed_queries_inside_driver_window():
-    """Policy clause 2: last round's driver failures re-enter immediately."""
-    missing = [n for n in _failed_r12() if n not in _window()]
-    assert not missing, f"round-12 failures outside window: {missing}"
-
-
-def test_every_query_accounted_for():
-    """Policy clause 4: window + last round's graded window + documented
-    deferrals + NEW entries leading the next window must cover the whole
-    registry — nothing goes silently ungraded."""
-    accounted = (
-        _window()
-        | set(registry.R12_ACTIVE)
-        | set(registry.DEFERRED_R13)
-        | set(registry.NEW_R13)
-    )
-    missing = sorted(set(registry.REGISTRY) - accounted)
-    assert not missing, f"queries with no grading account: {missing}"
-
-
-def test_deferrals_are_legitimate():
-    """Deferrals absorb exactly the window overflow, never last round's
-    failures and never changed code — every entry whose code changed in
-    r13 (CHANGED_R13) holds a graded slot, and the pinned r12 deferral
-    (sim_topk_ivf) drains this round via its natural r8-tier slot."""
-    deferred = set(registry.DEFERRED_R13)
-    assert not deferred & _window(), "deferred query occupies a window slot"
-    all_changed = (
-        set(registry.CHANGED_R12)
-        | set(registry.CHANGED_R12_TO_R13)
-        | set(registry.CHANGED_R13)
-        | set(registry.CHANGED_R13_TO_R14)
-    )
-    assert not deferred & all_changed, (
-        f"changed-code query deferred: {deferred & all_changed}"
-    )
-    # the one changed-code entry NOT graded this round holds a documented
-    # PINNED r14 slot (it is r12-green, so it is not in the deferral tiers
-    # either — it sits on a fresh grade while its no-op guard waits).
-    assert set(registry.CHANGED_R13_TO_R14) <= set(registry.R12_ACTIVE)
-    assert set(registry.CHANGED_R13_TO_R14) <= set(registry.R14_WINDOW)
-    assert not deferred & set(_failed_r12()), "driver failure deferred"
-    # Eligible for r13 grading: everything not sitting on a fresh r12 row
-    # and not a never-graded NEW entry (those lead the r14 window).
-    # text_index_search is r12-green but re-enters as changed code, so it
-    # occupies a slot WITHOUT being eligible-stale — the deferral count is
-    # the eligible overflow after subtracting the eligible window share.
-    eligible = (
-        set(registry.REGISTRY)
-        - set(registry.R12_ACTIVE)
-        - set(registry.NEW_R13)
-    )
-    assert eligible - deferred == _window() & eligible
-    assert len(deferred) == len(eligible) - len(_window() & eligible)
-
-
-def test_deferred_partition_is_consistent():
-    """The three documented deferral tiers partition DEFERRED_R13, and the
-    r8 tier is EMPTY (it drains completely into the r13 window)."""
-    tiers = (
-        set(registry.DEFERRED_R13_R9)
-        | set(registry.DEFERRED_R13_R10)
-        | set(registry.DEFERRED_R13_R11)
-    )
-    assert tiers == set(registry.DEFERRED_R13)
-    assert len(registry.DEFERRED_R13) == (
-        len(registry.DEFERRED_R13_R9)
-        + len(registry.DEFERRED_R13_R10)
-        + len(registry.DEFERRED_R13_R11)
-    )
-    assert set(registry.DEFERRED_R12_R8) <= _window(), (
-        "the r8-green tier must fully drain in r13"
-    )
-
-
 def test_every_window_entry_is_oracled():
-    """A window slot spent on an oracle-less entry is a guaranteed
-    err:no_oracle row (round-2 advice): all graded entries must carry an
-    exact oracle.  As of r6 the whole registry is oracled."""
-    from aws_etl_fiap_spark import queries  # noqa: F401
-
-    oracles = registry.oracle_sql()
-    unoracled = [n for n in _names() if n not in oracles]
-    assert not unoracled, f"entries without oracle: {unoracled}"
-
-
-def test_oracle_orphans():
-    from aws_etl_fiap_spark import queries  # noqa: F401
-
-    oracles = registry.oracle_sql()
-    assert set(oracles) <= set(registry.queries())
-
-
-def test_r10_window_matches_policy():
-    """The pinned window is exactly what the executable policy computes:
-    CHANGED_R9_SPILL re-entries + stalest-first fill (all 45 r5-green
-    entries drain this round, then the alphabetically-first r6-green)."""
-    # NEW_R10 entries are excluded from the pool: they did not exist when
-    # the window was pinned in r9, and the contract routes them to LEAD
-    # the r11 window instead (they are exact-oracled locally from day one).
-    pool = {
-        n: r for n, r in _last_green().items() if n not in registry.NEW_R10
-    }
-    expected = registry.compute_window(
-        pool,
-        failed=_failed_r9(),
-        changed=registry.CHANGED_R9_SPILL + registry.CHANGED_R10,
-    )
-    assert set(registry.R10_WINDOW) == expected
-    assert set(registry.DEFERRED_R9_R5) <= set(registry.R10_WINDOW), (
-        "the r5-stale tier must fully drain in r10"
-    )
-    # spill entries lead (contract: changed-code re-entries preempt).
-    assert registry.R10_WINDOW[: len(registry.CHANGED_R9_SPILL)] == (
-        registry.CHANGED_R9_SPILL
-    )
-
-
-def test_r11_window_precomputed():
-    """The next round's window is precomputed and pinned: NEW_R10 gap-fills
-    lead (never-graded), the remaining r6-green tier drains, and the
-    alphabetically-first r7-green entries fill."""
-    w = registry.R11_WINDOW
-    assert len(w) == DRIVER_WINDOW and len(set(w)) == DRIVER_WINDOW
-    assert set(w) <= set(registry.REGISTRY)
-    assert not set(w) & set(registry.R10_WINDOW)
-    lead = registry.NEW_R10 + registry.CHANGED_R10_SPILL
-    assert w[: len(lead)] == lead
-    assert set(registry.DEFERRED_R10_R6) <= set(w), (
-        "the r6-green tier must fully drain in r11"
-    )
-    # Policy agreement: after the r10 window greens, the executable policy
-    # picks exactly this set.
-    last = _last_green()
-    for n in registry.R10_WINDOW:
-        last[n] = 10
-    expected = registry.compute_window(
-        last, new=registry.NEW_R10, changed=registry.CHANGED_R10_SPILL
-    )
-    assert set(w) == expected
-
-
-def test_staleness_simulation_stays_under_ceiling():
-    """Forward-simulate the executable policy from the r10 state through
-    five more rounds and prove NO query's gap between green rows ever
-    exceeds MAX_STALENESS (= 5 at 236 queries / 50 slots).  This is the
-    r9 verdict's task 5: the ceiling as a failing test, not a comment."""
-    last = _last_green()
-    for n in registry.R10_WINDOW:
-        last[n] = 10
-    worst = 0
-    for rnd in range(11, 17):
-        if rnd == 11:
-            window = set(registry.R11_WINDOW)
-        elif rnd == 12:
-            # the r12 builder must re-enter the r10-changed pairs whose
-            # output-identical re-grades could not fit the full r11 window,
-            # the r11-changed stateful-totals gate (same precedent), and
-            # the entries whose code changed IN r12 (the textindex layout
-            # sidecar rode text_index_search).
-            window = registry.compute_window(
-                last,
-                changed=registry.CHANGED_R10_TO_R12
-                + ("stream_stateful_totals_equiv", "sim_power_iteration_pc1")
-                + registry.CHANGED_R12,
-            )
-        elif rnd == 13:
-            # the r13 builder re-enters the entries whose code changed in
-            # r13 (textindex sidecar/string-id work; curation-funnel
-            # composition); the pinned sim_topk_ivf re-grade holds its
-            # natural r8-tier slot.
-            window = registry.compute_window(last, changed=registry.CHANGED_R13)
-        elif rnd == 14:
-            # NEW_R13 gap-fills lead the r14 window (never graded), and
-            # the pinned CHANGED_R13_TO_R14 re-grade drains.
-            for n in registry.NEW_R13:
-                last.setdefault(n, 0)
-            window = registry.compute_window(
-                last,
-                new=registry.NEW_R13,
-                changed=registry.CHANGED_R13_TO_R14,
-            )
-        else:
-            window = registry.compute_window(last)
-        if rnd == 12:
-            # CHANGED_R10_TO_R12: the two upsert-gate re-entries deferred
-            # past the full r11 window must land in r12's natural r7-tier
-            # rotation (their staleness hits the ceiling exactly there).
-            missing = set(registry.CHANGED_R10_TO_R12) - window
-            assert not missing, f"r12 misses changed re-entries: {missing}"
-            # The policy must agree with the r12 ACTIVE window (the pinned
-            # R12_WINDOW with CHANGED_R12 prepended, 50th slot displaced).
-            assert window == set(registry.R12_ACTIVE)
-        if rnd == 13:
-            # The policy must agree with the ACTIVE r13 window (R13_WINDOW
-            # with CHANGED_R13 prepended, tail two fill slots displaced;
-            # the r8 tier drains, incl. the displaced agg_approx_profile
-            # and the pinned sim_topk_ivf re-grade, both at/below ceiling).
-            assert window == set(registry.DRIVER_PRIORITY)
-            assert "agg_approx_profile" in window
-            assert set(registry.CHANGED_R12_TO_R13) <= window
-        if rnd == 14:
-            # The policy must agree with the PRECOMPUTED pinned r14 window
-            # (NEW_R13 leads; the displaced r9-green pair lands at
-            # staleness exactly the ceiling; the r9 tier drains).
-            assert window == set(registry.R14_WINDOW)
-            assert {"corpus_dsir_weights", "corpus_epoch_shuffle"} <= window
-        for n in window:
-            prev = last[n]
-            if prev:  # never-graded entries (0) have no staleness gap yet
-                worst = max(worst, rnd - prev)
-            last[n] = rnd
-        stalest = min(v for v in last.values())
-        assert rnd - stalest < registry.MAX_STALENESS + 1, (
-            f"after r{rnd}, a query's newest green is r{stalest}"
-        )
-    assert worst <= registry.MAX_STALENESS, (
-        f"simulated staleness gap {worst} exceeds {registry.MAX_STALENESS}"
-    )
-
-
-def test_r10_window_covers_spill_and_stale():
-    """Historical pin (the r10 round's active window): the three
-    output-identical late-r9 code changes got re-graded, and the entire
-    r5-stale tier (18 TPC-H, the flagship smoke query, the media
-    fake-codec family) drained."""
-    w = set(registry.R10_WINDOW)
-    assert set(registry.CHANGED_R9_SPILL) <= w
-    assert "flagship_refined_summary" in w
-    # all 18 r5-stale TPC-H entries drain (q4/q6/q12/q14 are r6-green and
-    # ride the r11 window with the rest of the r6 tier).
-    tpch_r5 = [n for n in registry.DEFERRED_R9_R5 if n.startswith("tpch_")]
-    assert len(tpch_r5) == 18 and set(tpch_r5) <= w
-
-
-def test_r11_window_covers_new_spill_and_stale():
-    """Historical pin (the r11 round's active window): the never-graded
-    AVI gates got their first driver grade, the six output-identical r10
-    code changes (CHANGED_R10_SPILL) got re-graded, and the entire
-    r6-green tier (the dedup_minhash family, tpch_q4/q6/q12/q14, the r6
-    stream/roundtrip/pyds entries) drained — after r11, no query's newest
-    grade predates r7."""
-    w = set(registry.R11_WINDOW)
-    assert set(registry.NEW_R10) <= w
-    assert set(registry.CHANGED_R10_SPILL) <= w
-    assert set(registry.DEFERRED_R10_R6) <= w, (
-        "the r6-green tier must fully drain in r11"
-    )
-    for name in (
-        "tpch_q4_order_priority",
-        "tpch_q6_forecast_revenue",
-        "tpch_q12_shipping_priority_class",
-        "tpch_q14_promo_revenue",
-    ):
-        assert name in w
-    # AVI gates LED (never-graded entries get slots before everything).
-    assert registry.R11_WINDOW[:2] == registry.NEW_R10
-
-
-def test_r12_window_precomputed():
-    """The r12 policy window as precomputed in r11: the seven
-    CHANGED_R10_TO_R12 re-entries plus the r11-changed stateful-totals
-    gate lead, then the r7-green tier drains stalest-first."""
-    w = registry.R12_WINDOW
-    assert len(w) == DRIVER_WINDOW and len(set(w)) == DRIVER_WINDOW
-    assert set(w) <= set(registry.REGISTRY)
-    assert not set(w) & set(registry.R11_WINDOW)
-    lead = registry.CHANGED_R10_TO_R12 + ("stream_stateful_totals_equiv",)
-    assert w[: len(lead)] == lead
-
-
-def test_r12_active_window_regrades_all_debt():
-    """Historical pin (the r12 round's active window, r11 verdict task 1):
-    every query riding code newer than its newest official grade — the
-    seven CHANGED_R10_TO_R12 entries, stream_stateful_totals_equiv,
-    sim_power_iteration_pc1, and the r12-changed text_index_search — got
-    an official driver grade in r12, and the r7-green tier drained."""
-    w = set(registry.R12_ACTIVE)
-    assert set(registry.CHANGED_R10_TO_R12) <= w
-    assert {"stream_stateful_totals_equiv", "sim_power_iteration_pc1"} <= w
-    assert set(registry.CHANGED_R12) <= w
-    assert set(registry.DEFERRED_R11_R7) <= w, (
-        "the r7-green tier must fully drain in r12"
-    )
-    # changed-code re-entries LED the window.
-    lead = registry.CHANGED_R12 + registry.CHANGED_R10_TO_R12 + (
-        "stream_stateful_totals_equiv",
-    )
-    assert registry.R12_ACTIVE[: len(lead)] == lead
-
-
-def test_r13_window_precomputed():
-    """Historical pin (the r12-precomputed r13 window): pure stalest-first
-    — the entire remaining r8-green tier (including the displaced
-    agg_approx_profile) drains, then the alphabetically-first r9-green
-    entries fill."""
-    w = registry.R13_WINDOW
-    assert len(w) == DRIVER_WINDOW and len(set(w)) == DRIVER_WINDOW
-    assert set(w) <= set(registry.REGISTRY)
-    assert not set(w) & set(registry.R12_ACTIVE)
-    assert "agg_approx_profile" in w
-    assert set(registry.DEFERRED_R12_R8) <= set(w), (
-        "the r8-green tier must fully drain in r13"
-    )
-    # the r12-changed ivf gate's pinned re-grade slot (see registry
-    # CHANGED_R12_TO_R13): deferring its re-entry is legitimate ONLY
-    # because this membership holds.
-    assert set(registry.CHANGED_R12_TO_R13) <= set(w)
-
-
-def test_r13_active_window_regrades_all_debt():
-    """The ACTIVE r13 window (r12 verdict task 1): the r13-changed entries
-    re-enter, the pinned sim_topk_ivf re-grade drains (the one r12 'weak'
-    item), the whole r8-green tier drains, and after r13 no query's
-    newest grade predates r9."""
-    w = set(registry.DRIVER_PRIORITY)
-    assert set(registry.CHANGED_R13) <= w
-    assert set(registry.CHANGED_R12_TO_R13) <= w
-    assert set(registry.DEFERRED_R12_R8) <= w
-    # OUT-OF-WINDOW changed re-entries LEAD the window (in-window changed
-    # entries — roundtrip_partitioned_agg — keep their natural slot); the
-    # displaced tail trio leads the r14 fill instead.
-    prepended = tuple(
-        n for n in registry.CHANGED_R13 if n not in registry.R13_WINDOW
-    )
-    assert registry.DRIVER_PRIORITY[: len(prepended)] == prepended
-    displaced = set(registry.R13_WINDOW) - w
-    assert displaced == {
-        "ann_hard_negatives",
-        "corpus_dsir_weights",
-        "corpus_epoch_shuffle",
-    }
-    assert displaced <= set(registry.R14_WINDOW)
-
-
-def test_r14_window_precomputed():
-    """Next round's window is precomputed and pinned: NEW_R13 gap-fills
-    lead (never-graded), the pinned corpus_cluster_split re-grade drains,
-    the displaced r9-green trio and the rest of the r9 tier drain, then
-    the alphabetically-first r10-green entries fill."""
-    w = registry.R14_WINDOW
-    assert len(w) == DRIVER_WINDOW and len(set(w)) == DRIVER_WINDOW
-    assert set(w) <= set(registry.REGISTRY)
-    assert not set(w) & set(registry.DRIVER_PRIORITY)
-    lead = registry.NEW_R13 + registry.CHANGED_R13_TO_R14
-    assert w[: len(lead)] == lead
-    assert set(registry.DEFERRED_R13_R9) <= set(w), (
-        "the r9-green tier must fully drain in r14"
-    )
+    """A graded slot without an oracle is a guaranteed failed row.  The
+    oracle is required at registration, so the whole registry, window
+    included, must come back from ``oracle_sql()``."""
+    assert set(registry.oracle_sql()) == set(registry.REGISTRY)
