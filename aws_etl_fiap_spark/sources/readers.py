@@ -11,6 +11,8 @@ At 100 TB the scan is where most time goes, so the rules here are:
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +34,39 @@ TABLES = (
     "embeddings",
 )
 
+#: Entries each driver cache below keeps: far above one process's working
+#: set (a sweep over the whole registry at one scale factor leaves 10
+#: schema and 9 partition-count entries), but bounded, so a long-lived
+#: driver reading ever new paths or plans does not grow without limit.
+CACHE_ENTRIES = 1024
+
+
+class _LRUCache(OrderedDict):
+    """A dict that keeps its ``cap`` most recently used entries: ``get``
+    and item assignment mark a key used, and an insert past the cap evicts
+    the least recently used one.  Both are locked, so driver threads
+    sharing the module-level caches stay as safe as with a plain dict."""
+
+    def __init__(self, cap: int):
+        super().__init__()
+        self.cap = cap
+        self._lock = threading.Lock()
+
+    def get(self, key, default=None):
+        with self._lock:
+            if key not in self:
+                return default
+            self.move_to_end(key)
+            return self[key]
+
+    def __setitem__(self, key, value):
+        with self._lock:
+            super().__setitem__(key, value)
+            self.move_to_end(key)
+            if len(self) > self.cap:
+                self.popitem(last=False)
+
+
 #: Resolved parquet schemas, keyed by (path, mtime) — the in-process stand-in
 #: for the catalog the reference keeps in Glue (schemas are DECLARED there;
 #: only this bare-path reader has to infer).  ``spark.read.parquet`` runs
@@ -40,21 +75,19 @@ TABLES = (
 #: each, schema inference alone was seconds of pure latency).  Caching the
 #: SCHEMA (metadata, never data or results) and passing it explicitly skips
 #: the footer pass; the mtime key drops the entry if the file changes.
-_SCHEMA_CACHE: dict = {}
+_SCHEMA_CACHE = _LRUCache(CACHE_ENTRIES)
 
 
 def _data_mtime(path: str) -> float:
-    """Freshness stamp for the schema cache.  For a DIRECTORY table the
-    directory's own mtime does not change when part files are rewritten in
-    place (r13 advice), so take the max over the entries too — one listdir,
-    still pure metadata, no footer read."""
-    st = os.stat(path)
-    mt = st.st_mtime
-    if os.path.isdir(path):
-        for entry in os.scandir(path):
-            emt = entry.stat().st_mtime
-            if emt > mt:
-                mt = emt
+    """Freshness stamp for the schema cache.  For a DIRECTORY table no
+    directory's own mtime changes when a part file is rewritten in place
+    (r13 advice), and part files sit in partition subdirectories
+    (``k=1/part-0.parquet``), so take the max over the whole tree — pure
+    metadata, no footer read."""
+    mt = os.stat(path).st_mtime
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            mt = max(mt, os.stat(os.path.join(root, name)).st_mtime)
     return mt
 
 
@@ -74,7 +107,7 @@ def _cached_schema(path: str):
 #: constantly.  Semantically-equal plans have equal scan splits as long as
 #: the underlying fixture files are unchanged (they are immutable per run;
 #: a changed file changes the schema-cache key and the resulting plan).
-_NPARTS_CACHE: dict = {}
+_NPARTS_CACHE = _LRUCache(CACHE_ENTRIES)
 
 
 def spread_input(df: DataFrame, multiplier: int = 1) -> DataFrame:

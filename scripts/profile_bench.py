@@ -3,8 +3,10 @@
 For each query: warm once, then time ``count()`` (the bench action) and a
 ``noop``-sink write (full materialization, guide §1.4), and record the number
 of Spark jobs/stages/tasks the steady run launches (statusTracker over a
-per-query job group).  Writes JSON to plans/r14/profile_<tag>.json and the
-``explain("formatted")`` text per query to plans/r14/<name>_<tag>.txt.
+per-query job group) and the classes Janino compiles during it
+(``compiles``: nonzero means a steady run missed the codegen cache).
+Writes JSON to plans/r14/profile_<tag>.json and the ``explain("formatted")``
+text per query to plans/r14/<name>_<tag>.txt.
 
 Usage: python scripts/profile_bench.py <tag> [--only a,b,c] [--runs 3]
 """
@@ -21,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from aws_etl_fiap_spark.queries import REGISTRY  # noqa: E402
-from aws_etl_fiap_spark.session import get_spark  # noqa: E402
+from aws_etl_fiap_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 BENCH_NAMES = None  # filled in main from bench.py lists
 
@@ -67,9 +69,11 @@ def main() -> None:
         for i in range(args.runs):
             group = f"{name}-run{i}"
             sc.setJobGroup(group, name)
+            compiled = codegen_compiles(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             runs.append(time.perf_counter() - t0)
+            compiled = codegen_compiles(spark) - compiled
             sc.setJobGroup(None, None)
         tracker = sc.statusTracker()
         job_ids = tracker.getJobIdsForGroup(f"{name}-run{args.runs - 1}")
@@ -91,6 +95,7 @@ def main() -> None:
             "jobs": len(job_ids),
             "stages": n_stages,
             "tasks": n_tasks,
+            "compiles": compiled,
             "exchanges": plan.count("Exchange"),
             "python_nodes": sum(
                 plan.count(k)
