@@ -49,14 +49,6 @@ def monthly_summary(
     return df.groupBy(*keys).agg(*aggs).orderBy(*keys)
 
 
-def keyed_stats(df: DataFrame, key: str, value_cols: Sequence[str], decimals: int = 2) -> DataFrame:
-    """Reference A2 (b3_transform.py:336-344): single-key count + exact avgs."""
-    aggs = [F.count(F.lit(1)).alias("total_registros")] + [
-        dec_avg(c, decimals).alias(f"{c}_avg") for c in value_cols
-    ]
-    return df.groupBy(key).agg(*aggs).orderBy(key)
-
-
 def count_delta(df_before: DataFrame, df_after: DataFrame) -> tuple[int, int, int]:
     """Reference A4 (b3_transform.py:128-133): removed-row accounting."""
     before, after = df_before.count(), df_after.count()

@@ -29,11 +29,6 @@ def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     return df.withColumnsRenamed(dict(mapping))
 
 
-def add_literal(df: DataFrame, column: str, value) -> DataFrame:
-    """Constant column append (reference P5, b3_collector.py:48)."""
-    return df.withColumn(column, F.lit(value))
-
-
 def add_processing_date(df: DataFrame, column: str = "dataproc") -> DataFrame:
     """``dataproc`` = current date as yyyyMMdd string (reference P5/F7,
     b3_collector.py:106-107). Constant-folded by Catalyst, evaluated once."""

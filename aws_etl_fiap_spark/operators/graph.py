@@ -59,60 +59,55 @@ def _release_checkpoint_blocks(df: DataFrame) -> None:
         pass
 
 
+def _symmetric_edges(
+    edges: DataFrame, a: str, b: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """Pin the oriented edge list and return ``(e, sym, n_edges)``.
+
+    ``e`` is ``edges`` projected to ``(src, dst)`` and localCheckpointed
+    EAGERLY, not persisted: the pair-generation plan feeding ``edges``
+    (shingle explode + inverted-index join for dedup clustering) is the
+    expensive part, and a lazy persist leaves that full plan tree inside
+    EVERY round's join — each round re-runs analysis/AQE over it, and a
+    cache-miss round re-materializes pair generation wholesale (round-3
+    verdict measured a 1.06s within-run spread on a 2.78s min).
+
+    ``sym`` is the LAZY two-direction union over ``e``; the pin sits before
+    it because the union references its child twice, and pinning the union
+    would run pair generation twice in one job (r13 plan audit).
+    ``n_edges`` is ``sym``'s row count, metadata-cheap on the cache.  The
+    caller releases ``e`` once no round reads it."""
+    e = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).localCheckpoint(
+        eager=True
+    )
+    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    return e, sym, 2 * e.count()
+
+
+def _loop_width(session, n_edges: int):
+    """Scope ``spark.sql.shuffle.partitions`` to the measured edge count
+    (one partition per EDGES_PER_SHUFFLE_PARTITION edges, never above the
+    session default) for the duration of an iterative loop."""
+    default_parts = int(session.conf.get("spark.sql.shuffle.partitions", "200"))
+    loop_parts = max(1, min(default_parts, -(-n_edges // EDGES_PER_SHUFFLE_PARTITION)))
+    return scoped_conf(session, "spark.sql.shuffle.partitions", str(loop_parts))
+
+
 def connected_components(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 25,
-    oriented_unique: bool = False,
+    edges: DataFrame, src: str, dst: str, max_iter: int = 25
 ) -> DataFrame:
     """Label every vertex of the undirected graph ``edges`` with its
     component's minimum vertex id.
 
-    ``edges`` may list each pair in either (or both) directions. Returns
-    ``DataFrame[id, comp]`` covering every vertex that appears in an edge.
-    Raises if the propagation hasn't converged after ``max_iter`` rounds
-    (unconverged labels would silently over-split clusters).
-
-    ``oriented_unique=True`` declares that ``edges`` carries each
-    undirected pair EXACTLY ONCE with ``src < dst`` (the shape every pair
-    generator in operators/dedup.py and linkage.py emits: a groupBy over
-    ``id_a < id_b``).  Then the two-direction union is duplicate-free by
-    construction and the symmetrize step skips its ``distinct()`` — one
-    full shuffle + hash-dedup of the edge list, the widest frame in the
-    query, removed outright (guide-§2.4 class: a distinct on data that is
-    already unique).  Duplicate edges would only inflate join fan-out, not
-    change the min-label fixpoint, so a violated promise degrades
-    performance, never correctness.
+    ``edges`` may list each pair in either (or both) directions: duplicate
+    edges only inflate join fan-out, never change the min-label fixpoint.
+    Returns ``DataFrame[id, comp]`` covering every vertex that appears in
+    an edge.  Raises if the propagation hasn't converged after
+    ``max_iter`` rounds (unconverged labels would silently over-split
+    clusters).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # EAGER localCheckpoint, not persist(): the pair-generation plan feeding
-    # ``edges`` (shingle explode + inverted-index join for dedup clustering)
-    # is the expensive part, and a lazy persist leaves that full plan tree
-    # inside EVERY round's join — each round re-runs analysis/AQE over it,
-    # and a cache-miss round re-materializes pair generation wholesale
-    # (round-3 verdict measured a 1.06s within-run spread on a 2.78s min).
-    # Checkpointing eagerly pays the materialization once, and every round's
-    # plan then starts from a flat cached-RDD scan of (src, dst) longs.
-    #
-    # The checkpoint pins the ORIENTED edge list, BEFORE symmetrizing: the
-    # two-direction union references its child twice, so checkpointing the
-    # union instead would run pair generation twice inside one
-    # materialization job (r13 plan audit).  For oriented-unique input the
-    # union over the cache is duplicate-free by construction and stays
-    # LAZY — each loop round re-reads the cached longs twice, which is
-    # noise next to the join it feeds; the old unconditional ``distinct()``
-    # paid a full shuffle + hash-dedup of the widest frame in the query to
-    # dedup data that was already unique (guide-§2.4 class).
-    e = e.localCheckpoint(eager=True)
-    n_pairs = e.count()  # metadata-cheap on the materialized cache
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    n_edges = 2 * n_pairs
-    if not oriented_unique:
-        sym = sym.distinct().localCheckpoint(eager=True)
-        _release_checkpoint_blocks(e)
-        # Count AFTER the dedup (metadata-cheap on the materialized cache):
-        # heavily duplicated input would otherwise overestimate both the
-        # loop width and the label-broadcast gate below (r13 advice).
-        n_edges = sym.count()
-    if n_pairs == 0:
+    e, sym, n_edges = _symmetric_edges(edges, src, dst)
+    if n_edges == 0:
         # An EMPTY edge set is a normal state, not a convergence failure:
         # the curation funnel's pair stage legitimately produces zero
         # near-dup edges on an already-clean shard, and the propagation
@@ -124,18 +119,18 @@ def connected_components(
         return sym.select(
             F.col("src").alias("id"), F.col("src").alias("comp")
         ).limit(0)
-    session = sym.sparkSession
-    default_parts = int(session.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = max(1, min(default_parts, -(-n_edges // EDGES_PER_SHUFFLE_PARTITION)))
-    # Deliberate join strategy from the MEASURED pair count (guide §3.1):
-    # the label frame carries exactly one row per vertex (<= 2 * n_pairs),
-    # so below the threshold each hop broadcasts the labels and the edge
+    # Deliberate join strategy from the MEASURED edge count (guide §3.1):
+    # the label frame carries exactly one row per vertex (<= n_edges), so
+    # below the threshold each hop broadcasts the labels and the edge
     # cache is map-scanned, never shuffled — the same gate pagerank applies
     # (see BROADCAST_VERTEX_ROWS).  Above it, hops fall back to the shuffle
     # join unchanged.
-    bcast_labels = n_edges <= BROADCAST_VERTEX_ROWS
-    with scoped_conf(session, "spark.sql.shuffle.partitions", str(loop_parts)):
-        return _propagate(sym, max_iter, bcast_labels)
+    with _loop_width(sym.sparkSession, n_edges):
+        comp = _propagate(sym, max_iter, n_edges <= BROADCAST_VERTEX_ROWS)
+    # The result depends only on the final label checkpoint; the edge
+    # blocks can go now instead of at driver GC.
+    _release_checkpoint_blocks(e)
+    return comp
 
 
 def _propagate(sym: DataFrame, max_iter: int, bcast_labels: bool = False) -> DataFrame:
@@ -166,10 +161,8 @@ def _propagate(sym: DataFrame, max_iter: int, bcast_labels: bool = False) -> Dat
             .agg(F.min("comp").alias("comp"), F.min("own").alias("own"))
         )
 
-    # sym's localCheckpoint blocks are MEMORY_AND_DISK cache the
-    # ContextCleaner releases once the frame is GC'd (same lifecycle the
-    # dedup shingle checkpoint relies on); label frames are still
-    # unpersisted eagerly round-over-round below.
+    # Label frames are unpersisted eagerly round-over-round below; the
+    # caller releases the edge pin once the loop has converged.
     prev_cached = lbl
     for _ in range(max_iter):
         # HOPS_PER_ROUND propagation hops per Spark job: per-round fixed
@@ -200,9 +193,6 @@ def _propagate(sym: DataFrame, max_iter: int, bcast_labels: bool = False) -> Dat
         prev_cached = stepped
         lbl = stepped.select("id", "comp")
         if changed == 0:
-            # The result depends only on the FINAL label checkpoint; the
-            # symmetrized edge blocks can go now instead of at driver GC.
-            _release_checkpoint_blocks(sym)
             # Hint the RETURNED frame under the same measured gate (r14):
             # the r13 ``.persist()`` incidentally gave consumers an
             # InMemoryRelation whose stats made their anti-joins broadcast
@@ -235,7 +225,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list:
     ``pr_{k+1}(v) = (1-d)/N + d * sum_{u->v} pr_k(u) / outdeg(u)`` from a
@@ -258,11 +247,7 @@ def pagerank(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     e = e.localCheckpoint(eager=True)
-    session = e.sparkSession
-    n_edges = e.count()
-    default_parts = int(session.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = max(1, min(default_parts, -(-n_edges // EDGES_PER_SHUFFLE_PARTITION)))
-    with scoped_conf(session, "spark.sql.shuffle.partitions", str(loop_parts)):
+    with _loop_width(e.sparkSession, e.count()):
         # Degrees materialize ONCE (eager checkpoint inside the scoped loop
         # width): deg is consumed by the initial rank frame and by every
         # round's outdeg re-attach join — lazily it would re-shuffle the
@@ -279,16 +264,15 @@ def pagerank(
         )
         n = deg.count()
         base = (1.0 - damping) / n
-        if broadcast_ranks is None:
-            # Deliberate join strategy (guide §3.1) from the MEASURED vertex
-            # count: below the threshold every round becomes a map-side
-            # broadcast join — the edge list (the heavy side; checkpointed,
-            # flat-scanned) is never shuffled at all, and the only exchange
-            # per round is the map-side-combined contribution sum.  A
-            # LogicalRDD carries no stats, so without the hint the planner
-            # sort-merge-joins and re-shuffles the edges EVERY round (r13
-            # plan audit: 6 SMJs, edges exchanged 3x).
-            broadcast_ranks = n <= BROADCAST_VERTEX_ROWS
+        # Deliberate join strategy (guide §3.1) from the MEASURED vertex
+        # count: below the threshold every round becomes a map-side
+        # broadcast join — the edge list (the heavy side; checkpointed,
+        # flat-scanned) is never shuffled at all, and the only exchange
+        # per round is the map-side-combined contribution sum.  A
+        # LogicalRDD carries no stats, so without the hint the planner
+        # sort-merge-joins and re-shuffles the edges EVERY round (r13
+        # plan audit: 6 SMJs, edges exchanged 3x).
+        bcast = n <= BROADCAST_VERTEX_ROWS
         # outdeg rides along with the rank frame so the per-round join
         # touches only (edges x ranks), not a third frame.
         ranks = deg.select(
@@ -296,7 +280,7 @@ def pagerank(
         )
         pinned = None  # last rank checkpoint; e and deg feed every round
         for it in range(iters):
-            r_in = F.broadcast(ranks) if broadcast_ranks else ranks
+            r_in = F.broadcast(ranks) if bcast else ranks
             contribs = e.join(r_in, e.src == ranks.id).select(
                 F.col("dst"), (F.col("pr") / F.col("outdeg")).alias("c")
             )
@@ -306,7 +290,7 @@ def pagerank(
                     F.col("dst").alias("id"),
                     (F.lit(base) + F.lit(damping) * F.col("s")).alias("pr"),
                 )
-                .join(F.broadcast(deg) if broadcast_ranks else deg,
+                .join(F.broadcast(deg) if bcast else deg,
                       F.col("id") == deg.src)
                 .select("id", "pr", "outdeg")
             )
@@ -319,7 +303,7 @@ def pagerank(
             # tree deepens by ~3 joins per round and the driver's
             # analysis/codegen, not the data, becomes the bottleneck past
             # ~8 rounds.  The common iters<=8 callers never pin there.
-            if not broadcast_ranks or (it % 8 == 7 and it != iters - 1):
+            if not bcast or (it % 8 == 7 and it != iters - 1):
                 next_ranks = next_ranks.localCheckpoint(eager=True)
                 # The new pin has materialized, so nothing reads the
                 # previous one any more: drop its blocks now instead of
@@ -350,8 +334,7 @@ def pagerank(
 
 
 def label_propagation_communities(
-    edges: DataFrame, a: str = "id_a", b: str = "id_b", iters: int = 2,
-    oriented_unique: bool = False,
+    edges: DataFrame, a: str = "id_a", b: str = "id_b", iters: int = 2
 ) -> DataFrame:
     """Community detection by synchronous frequency label propagation
     (Raghavan et al. 2007, "Near linear time algorithm to detect community
@@ -370,18 +353,13 @@ def label_propagation_communities(
     exactly — the asynchronous/randomized variants of the paper are not
     oracle-able.
 
-    ``oriented_unique=True`` is the same contract as
-    :func:`connected_components`: each undirected pair appears exactly once
-    with ``a < b``, so the symmetrize ``distinct()`` is skipped.  NOTE the
-    stakes differ from CC: duplicate edges would double VOTES, so the
-    contract is load-bearing for results here — only pass it for frames
-    from the pair generators that aggregate on the oriented pair.
+    Input contract: each undirected pair appears AT MOST ONCE.  Unlike
+    :func:`connected_components`, a duplicate edge would change results
+    here — it doubles that neighbor's VOTE.  Every caller feeds a pair
+    generator's output, which groups by the oriented pair (``a < b``).
 
-    Scale shape (r14, the CC treatment): the oriented edge list
-    checkpoints BEFORE the two-direction union (the union references its
-    child twice — checkpointing after ran pair generation twice inside one
-    materialization job, the r13 CC finding); each round is one join of
-    the edge cache against the label frame (broadcast under the measured
+    Scale shape (r14, the CC treatment): each round is one join of the
+    edge cache against the label frame (broadcast under the measured
     BROADCAST_VERTEX_ROWS gate, shuffle above it), one (vertex, label)
     count aggregate, and a map-side-combinable min-STRUCT argmax —
     ``min(struct(-cnt, lab))`` picks (max cnt, ties to smallest label),
@@ -389,20 +367,9 @@ def label_propagation_communities(
     extra sort+exchange.  Label frames localCheckpoint per round so the
     plan stays flat.
     """
-    e = edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    n_pairs = e.count()
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    n_edges = 2 * n_pairs
-    if not oriented_unique:
-        sym = sym.distinct().localCheckpoint(eager=True)
-        _release_checkpoint_blocks(e)
-        n_edges = sym.count()
-    session = e.sparkSession
-    default_parts = int(session.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = max(1, min(default_parts, -(-n_edges // EDGES_PER_SHUFFLE_PARTITION)))
+    e, sym, n_edges = _symmetric_edges(edges, a, b)
     bcast = n_edges <= BROADCAST_VERTEX_ROWS
-    with scoped_conf(session, "spark.sql.shuffle.partitions", str(loop_parts)):
+    with _loop_width(e.sparkSession, n_edges):
         lbl = sym.select(F.col("src").alias("id")).distinct().withColumn(
             "lab", F.col("id")
         )
@@ -425,6 +392,10 @@ def label_propagation_communities(
                 .localCheckpoint(eager=True)
             )
             _release_checkpoint_blocks(prev)
+    if iters >= 1:
+        # The last label pin has materialized, so no round reads the edges
+        # any more.  With iters=0 the returned seed frame still reads e.
+        _release_checkpoint_blocks(e)
     return lbl
 
 
@@ -434,7 +405,6 @@ def bfs_hops(
     a: str = "id_a",
     b: str = "id_b",
     max_hops: int = 3,
-    oriented_unique: bool = False,
 ) -> DataFrame:
     """Multi-source breadth-first shortest-hop distances over an undirected
     graph given as oriented distinct edges (``a < b``): every vertex
@@ -446,14 +416,8 @@ def bfs_hops(
     the output (a bounded-horizon BFS, deliberately: the horizon is the
     determinism contract the unrolled SQL twin reproduces).
 
-    ``oriented_unique=True`` is the same contract as
-    :func:`connected_components`: the input carries each undirected pair
-    exactly once with ``a < b`` (every pair generator in operators/dedup.py
-    and sequences.py emits this), so the two-direction union is
-    duplicate-free by construction and the symmetrize ``distinct()`` — a
-    full shuffle + hash-dedup of the widest frame — is skipped.  Duplicate
-    edges under a violated promise only repeat candidate ids ahead of the
-    per-round ``distinct``, degrading performance, never results.
+    Duplicate edges only repeat candidate ids ahead of the per-round
+    ``distinct``: they cost performance, never results.
 
     Scale shape (r14, the pagerank/CC treatment): the oriented edge list
     checkpoints once; per round the edges join the CURRENT frontier only
@@ -466,20 +430,9 @@ def bfs_hops(
     reached set is a lazy union of the checkpointed frontiers (flat scans
     of cached longs), never re-checkpointed.  Above the gate the joins
     fall back to shuffles at the edge-count-scoped width unchanged."""
-    e = edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    e = e.localCheckpoint(eager=True)
-    n_pairs = e.count()
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    n_edges = 2 * n_pairs
-    if not oriented_unique:
-        sym = sym.distinct().localCheckpoint(eager=True)
-        _release_checkpoint_blocks(e)
-        n_edges = sym.count()
-    session = e.sparkSession
-    default_parts = int(session.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_parts = max(1, min(default_parts, -(-n_edges // EDGES_PER_SHUFFLE_PARTITION)))
+    e, sym, n_edges = _symmetric_edges(edges, a, b)
     bcast = n_edges <= BROADCAST_VERTEX_ROWS
-    with scoped_conf(session, "spark.sql.shuffle.partitions", str(loop_parts)):
+    with _loop_width(e.sparkSession, n_edges):
         # Filter BEFORE the vertex distinct: the seed predicate is a
         # deterministic row predicate, so filter-then-distinct equals
         # distinct-then-filter while shuffling only matching ids.
@@ -513,11 +466,7 @@ def bfs_hops(
     # The checkpointed frontiers ARE the result's lineage — only the edge
     # cache is dead once the loop ends.  Frontier blocks release at driver
     # GC of the returned frame (repo-wide checkpoint lifecycle).
-    # Without the promise, e's blocks were released once sym checkpointed.
-    if oriented_unique:
-        _release_checkpoint_blocks(e)
-    else:
-        _release_checkpoint_blocks(sym)
+    _release_checkpoint_blocks(e)
     return reached
 
 

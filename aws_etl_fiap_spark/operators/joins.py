@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -97,20 +97,6 @@ def range_join(
     bands must be small (it is broadcast; the big side never moves)."""
     cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
     return big.join(F.broadcast(bands), cond, "inner")
-
-
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Column | str]],
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Fact-to-dimensions equi-join chain; dims broadcast by default (the
-    canonical 100 TB star shape: the fact table never shuffles for dims)."""
-    out = fact
-    for dim, cond in dims:
-        dim = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(dim, cond)
-    return out
 
 
 def bloom_prefiltered_join(

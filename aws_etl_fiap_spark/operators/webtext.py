@@ -78,37 +78,11 @@ def _block_text(block: Column) -> Column:
     )
 
 
-def _block_words(block: Column) -> Column:
-    return F.filter(
-        F.split(_block_text(block), " "), lambda w: w != F.lit("")
-    )
-
-
 def _link_chars(block: Column) -> Column:
     return F.aggregate(
         F.regexp_extract_all(block, F.lit(_ANCHOR_RE), F.lit(1)),
         F.lit(0),
         lambda acc, x: acc + F.length(x),
-    )
-
-
-def _keep_block(block: Column) -> Column:
-    words = _block_words(block)
-    n_words = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS)))
-    link_density = _link_chars(block).cast("double") / F.greatest(
-        F.length(_block_text(block)), F.lit(1)
-    ).cast("double")
-    stop_frac = n_stop.cast("double") / F.greatest(n_words, F.lit(1)).cast(
-        "double"
-    )
-    return (
-        (n_words > 0)
-        & (link_density <= F.lit(MAX_LINK_DENSITY))
-        & (
-            (n_words >= F.lit(MIN_BLOCK_WORDS))
-            | (stop_frac >= F.lit(MIN_STOPWORD_FRAC))
-        )
     )
 
 

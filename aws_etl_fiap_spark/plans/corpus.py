@@ -69,7 +69,7 @@ def curate_corpus(
         id_col,
     ).select(df.columns).localCheckpoint(eager=False)
     pairs = ngram_jaccard_pairs(exact, id_col, text_col, jaccard_threshold)
-    comp = connected_components(pairs, "id_a", "id_b", oriented_unique=True)
+    comp = connected_components(pairs, "id_a", "id_b")
     dropped = comp.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias(id_col)
     )

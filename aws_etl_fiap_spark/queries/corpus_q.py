@@ -405,17 +405,13 @@ def corpus_shard_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shard repartition guard caps the file count at tasks-per-shard,
     not tasks x shards."""
     import os
-    import shutil
-    import tempfile
 
     from aws_etl_fiap_spark.operators.dedup import portable_hash60
     from aws_etl_fiap_spark.operators.text import token_count
-    from aws_etl_fiap_spark.sources.writers import read_back, write_partitioned
+    from aws_etl_fiap_spark.sources.writers import read_back, scratch_sink, write_partitioned
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="shards_", dir=base)
-    path = os.path.join(tmp, "corpus_shards")
-    try:
+    with scratch_sink("shards_") as tmp:
+        path = os.path.join(tmp, "corpus_shards")
         docs = load_table(spark, sf_dir, "documents")
         sharded = docs.select(
             "doc_id",
@@ -439,8 +435,6 @@ def corpus_shard_write_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return manifest.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -535,9 +529,7 @@ def corpus_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", JACCARD_THRESHOLD, n=3)
-    comp = connected_components(
-        pairs, "id_a", "id_b", oriented_unique=True
-    ).withColumnsRenamed(
+    comp = connected_components(pairs, "id_a", "id_b").withColumnsRenamed(
         {"id": "doc_id"}
     )
     assigned = docs.select("doc_id").join(comp, "doc_id", "left")

@@ -152,7 +152,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(df, "doc_id", "text", JACCARD_THRESHOLD, n=3)
-    comp = connected_components(pairs, "id_a", "id_b", oriented_unique=True)
+    comp = connected_components(pairs, "id_a", "id_b")
     return comp.select(
         F.col("id").alias("doc_id"),
         F.col("comp").alias("canonical"),

@@ -2,14 +2,13 @@
 its parquet-only at-rest layer — the CSV / JSON-lines / ORC surfaces an ETL
 engine meets at its boundaries, each behind the driver's exact-value gate).
 
-Pattern mirrors writepath_q.py: write the real sink into a per-run temp dir
-under ``SPARK_GRAFT_SINK_DIR`` (local[*] assumption documented there), read
-it back through the schema-enforced readers in sources/formats.py, aggregate,
-eagerly localCheckpoint (the temp files are deleted on return), and hash the
-result against an oracle computed straight from the ORIGINAL parquet table —
-so the serializer, the header/encoding, the schema-on-read enforcement, and
-(for JSONL) the PERMISSIVE corrupt-row quarantine are all inside the
-verified loop.
+Pattern mirrors writepath_q.py: write the real sink into a
+``sources.writers.scratch_sink`` directory, read it back through the
+schema-enforced readers in sources/formats.py, aggregate, eagerly
+localCheckpoint, and hash the result against an oracle computed straight
+from the ORIGINAL parquet table — so the serializer, the header/encoding,
+the schema-on-read enforcement, and (for JSONL) the PERMISSIVE corrupt-row
+quarantine are all inside the verified loop.
 
 Exactness notes:
 - doubles survive CSV/JSON textually because Spark writes the shortest
@@ -24,8 +23,6 @@ Exactness notes:
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,13 +38,9 @@ from aws_etl_fiap_spark.sources.formats import (
     write_orc,
 )
 from aws_etl_fiap_spark.sources.readers import load_table
+from aws_etl_fiap_spark.sources.writers import scratch_sink
 
 _N_CORRUPT = 7
-
-
-def _tmp(prefix: str) -> str:
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
 @query(
@@ -69,9 +62,8 @@ def roundtrip_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample; sources/formats.py docstring) -> aggregate.  Values must
     hash-equal the oracle over the original parquet, so the text encode /
     decode of bigint, double, date and quoted strings is all verified."""
-    tmp = _tmp("csv_rt_")
-    path = os.path.join(tmp, "orders_csv")
-    try:
+    with scratch_sink("csv_rt_") as tmp:
+        path = os.path.join(tmp, "orders_csv")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -93,8 +85,6 @@ def roundtrip_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_date").alias("last_date"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -120,9 +110,8 @@ def roundtrip_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate keeps them as the NULL event_type group, so the oracle pins
     BOTH the good-row values (vs original parquet) and the exact quarantine
     count: a reader that dropped or mis-parsed corrupt lines hash-fails."""
-    tmp = _tmp("jsonl_rt_")
-    path = os.path.join(tmp, "events_jsonl")
-    try:
+    with scratch_sink("jsonl_rt_") as tmp:
+        path = os.path.join(tmp, "events_jsonl")
         src = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
@@ -144,8 +133,6 @@ def roundtrip_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value", 2).alias("total_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -164,9 +151,8 @@ def roundtrip_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back -> aggregate, hash-equal to the oracle over the original
     parquet — the columnar sibling format round-trips binary-exactly (no
     text encode), so this pins the writer/reader pair itself."""
-    tmp = _tmp("orc_rt_")
-    path = os.path.join(tmp, "part_orc")
-    try:
+    with scratch_sink("orc_rt_") as tmp:
+        path = os.path.join(tmp, "part_orc")
         src = load_table(spark, sf_dir, "part")
         write_orc(src.repartition(8), path)
         back = read_orc(spark, path)
@@ -176,8 +162,6 @@ def roundtrip_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("p_size").cast("bigint")).alias("sum_size"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -209,9 +193,8 @@ def roundtrip_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     path: no rewrite of historical files, schema merged at scan time (pay
     the footer merge only when evolution is in flight; freeze the final
     schema in the catalog afterwards — sources/catalog.py)."""
-    tmp = _tmp("evolve_rt_")
-    path = os.path.join(tmp, "orders_evolving")
-    try:
+    with scratch_sink("evolve_rt_") as tmp:
+        path = os.path.join(tmp, "orders_evolving")
         src = load_table(spark, sf_dir, "orders")
         gen1 = src.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -232,8 +215,6 @@ def roundtrip_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_year").cast("bigint")).alias("sum_year"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -256,16 +237,10 @@ def roundtrip_corrupt_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the source-table oracle (a silent row loss OR a crash both fail
     the gate).  The conf is scoped, not session-global: corruption
     tolerance is an opt-in per read — default-on would mask real damage."""
-    import os
-    import shutil
-    import tempfile
-
     from aws_etl_fiap_spark.confs import scoped_conf
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="corrupt_rt_", dir=base)
-    path = os.path.join(tmp, "orders_pq")
-    try:
+    with scratch_sink("corrupt_rt_") as tmp:
+        path = os.path.join(tmp, "orders_pq")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -281,5 +256,3 @@ def roundtrip_corrupt_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dec_sum("o_totalprice", 2).alias("total_price"),
             )
             return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -330,11 +330,6 @@ def graph_bfs_hops_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges,
         lambda c: c.startswith(BFS_SEED_PREFIX),
         max_hops=BFS_HOPS,
-        # basket_pairs emits each undirected pair exactly once with
-        # item_a < item_b (groupBy over the oriented pair) — the same
-        # contract dedup_cluster_canonical declares to connected_components,
-        # so the symmetrize distinct() is skipped (r14, guide §2.4).
-        oriented_unique=True,
     )
     return out.select(F.col("id").alias("brand"), F.col("hops").cast("int").alias("hops"))
 
@@ -365,8 +360,6 @@ def graph_community_lpa_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("item_a").alias("id_a"), F.col("item_b").alias("id_b"))
     # basket_pairs aggregates on the oriented (item_a < item_b) pair, so
     # each undirected edge arrives exactly once — the duplicate-free
-    # contract the vote counts need (r14; see the operator docstring).
-    out = label_propagation_communities(
-        edges, iters=LPA_ITERS, oriented_unique=True
-    )
+    # contract the vote counts need (see the operator docstring).
+    out = label_propagation_communities(edges, iters=LPA_ITERS)
     return out.select(F.col("id").alias("brand"), F.col("lab").alias("community"))

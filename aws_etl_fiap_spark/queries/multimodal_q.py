@@ -171,22 +171,18 @@ def media_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, sha256) must hash-equal an oracle computed from the source
     table — so the file sink, the distributed listing, and the content
     bytes are all inside the verified loop.  Mirrors the formats_q
-    roundtrip pattern (temp dir under SPARK_GRAFT_SINK_DIR, eager
-    checkpoint, cleanup)."""
+    roundtrip pattern (``scratch_sink``, eager checkpoint)."""
     import os
-    import shutil
-    import tempfile
 
     from aws_etl_fiap_spark.operators.multimodal import (
         documents_as_media,
         read_payload_files,
         write_payload_files,
     )
+    from aws_etl_fiap_spark.sources.writers import scratch_sink
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="blob_rt_", dir=base)
-    path = os.path.join(tmp, "blobs")
-    try:
+    with scratch_sink("blob_rt_") as tmp:
+        path = os.path.join(tmp, "blobs")
         media = documents_as_media(load_table(spark, sf_dir, "documents"))
         write_payload_files(media, path)
         got = read_payload_files(spark, path).select(
@@ -195,8 +191,6 @@ def media_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sha2(F.col("payload"), 256).alias("digest"),
         )
         return got.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

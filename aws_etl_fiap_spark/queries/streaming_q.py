@@ -336,21 +336,20 @@ def stream_upsert_merge_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic however the file source packs files into micro-batches.
     The oracle recomputes the final table state straight from orders; the
     aggregate over the merged table must hash-equal it."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_etl_fiap_spark.functions.parity import dec_sum
     from aws_etl_fiap_spark.sources.readers import load_table
-    from aws_etl_fiap_spark.sources.writers import upsert_partitioned, write_partitioned
+    from aws_etl_fiap_spark.sources.writers import (
+        scratch_sink,
+        upsert_partitioned,
+        write_partitioned,
+    )
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="stream_upsert_", dir=base)
-    table = os.path.join(tmp, "orders_by_year")
-    inbox = os.path.join(tmp, "inbox")
-    ckpt = os.path.join(tmp, "ckpt")
-    try:
+    with scratch_sink("stream_upsert_") as tmp:
+        table = os.path.join(tmp, "orders_by_year")
+        inbox = os.path.join(tmp, "inbox")
+        ckpt = os.path.join(tmp, "ckpt")
         src = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
@@ -411,8 +410,6 @@ def stream_upsert_merge_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("o_totalprice", 2).alias("total_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -535,17 +532,12 @@ def stream_multibatch_totals_equiv(spark: SparkSession, sf_dir: str) -> DataFram
     watermark delay exceeds the data's time span, so no split ordering can
     mark rows late — state carry-over is what's under test, not eviction.
     Must hash-equal the one-shot batch GROUP BY oracle."""
-    import os
-    import shutil
-    import tempfile
-
     from aws_etl_fiap_spark.sources.readers import load_table
+    from aws_etl_fiap_spark.sources.writers import scratch_sink
     from aws_etl_fiap_spark.streaming.windows import stateful_running_totals
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="mb_stream_", dir=base)
-    path = os.path.join(tmp, "events_split")
-    try:
+    with scratch_sink("mb_stream_") as tmp:
+        path = os.path.join(tmp, "events_split")
         # NTZ ts for the parquet split (tz-free file contents); the stream
         # read below re-labels to an instant under scoped UTC because
         # watermarks require TimestampType.
@@ -579,8 +571,6 @@ def stream_multibatch_totals_equiv(spark: SparkSession, sf_dir: str) -> DataFram
             F.max("n").alias("n"), F.expr("max_by(total, n)").alias("total")
         )
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

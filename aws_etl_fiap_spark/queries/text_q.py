@@ -608,21 +608,18 @@ def text_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     document frequencies; one doc_id-keyed shuffle; the documents table
     is touched only by the final id-join on the hit list."""
     import os
-    import shutil
-    import tempfile
 
     from aws_etl_fiap_spark.operators.textindex import (
         conjunctive_search,
         read_postings_for,
         write_inverted_index,
     )
+    from aws_etl_fiap_spark.sources.writers import scratch_sink
 
     terms = ["spark", "vector", "customer"]
     n_buckets = 16
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="textidx_", dir=base)
-    path = os.path.join(tmp, "postings")
-    try:
+    with scratch_sink("textidx_") as tmp:
+        path = os.path.join(tmp, "postings")
         docs = load_table(spark, sf_dir, "documents")
         write_inverted_index(
             docs, path, layout="bucket", n_buckets=n_buckets
@@ -647,8 +644,6 @@ def text_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lang", "source", "n_chars"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

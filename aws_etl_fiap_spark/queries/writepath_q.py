@@ -15,8 +15,6 @@ verified loop.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +26,7 @@ from aws_etl_fiap_spark.sources.readers import load_table
 from aws_etl_fiap_spark.sources.writers import (
     compact_partitions,
     read_back,
+    scratch_sink,
     write_partitioned,
 )
 
@@ -49,19 +48,9 @@ def roundtrip_partitioned_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_partitions (staging + atomic swap) -> read back -> aggregate.
     The aggregate must match the oracle computed from the ORIGINAL table, so
     any row lost/duplicated/mangled by the write, the partition encoding, or
-    the compaction rewrite hash-fails.
-
-    The sink lands under ``SPARK_GRAFT_SINK_DIR`` (default: the local temp
-    dir) in a per-run directory deleted before returning; the aggregate is
-    localCheckpointed EAGERLY first, so the frame the driver later collects
-    no longer references the deleted files.  NOTE: with the local-tempdir
-    default this query assumes local[*] mode — on a real cluster executors
-    cannot reach the driver's /tmp, so point SPARK_GRAFT_SINK_DIR at shared
-    storage (round-3 advice)."""
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="roundtrip_", dir=base)
-    path = os.path.join(tmp, "orders_by_year")
-    try:
+    the compaction rewrite hash-fails.  The sink is a ``scratch_sink``."""
+    with scratch_sink("roundtrip_") as tmp:
+        path = os.path.join(tmp, "orders_by_year")
         src = load_table(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate").cast("int")
         )
@@ -84,8 +73,6 @@ def roundtrip_partitioned_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Eager materialization: the temp table is deleted on return, so the
         # frame the driver collects must not lazily re-scan it.
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -109,47 +96,43 @@ def bucketed_join_colocated_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the 100 TB fact-to-fact join answer: broadcast covers small
     dims, but two big tables joined repeatedly on the same key should pay
     the bucketed write once and never shuffle again.  Broadcast is disabled
-    (scoped) so the plan can't dodge the claim; the bucketed sink lands
-    under SPARK_GRAFT_SINK_DIR (local[*] assumption, as
-    roundtrip_partitioned_agg).
+    (scoped) so the plan can't dodge the claim.
     """
     from aws_etl_fiap_spark.confs import scoped_conf
     from aws_etl_fiap_spark.sources.writers import write_bucketed
 
     run_id = uuid.uuid4().hex[:8]
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix=f"bucketed_{run_id}_", dir=base)
     t_orders, t_cust = f"b_orders_{run_id}", f"b_customer_{run_id}"
-    try:
-        write_bucketed(
-            load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-            t_orders, ["o_custkey"], 8,
-            path=os.path.join(tmp, t_orders), sort_cols=["o_custkey"],
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-            t_cust, ["c_custkey"], 8,
-            path=os.path.join(tmp, t_cust), sort_cols=["c_custkey"],
-        )
-        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-            joined = spark.table(t_orders).join(
-                spark.table(t_cust), F.col("o_custkey") == F.col("c_custkey")
+    with scratch_sink(f"bucketed_{run_id}_") as tmp:
+        try:
+            write_bucketed(
+                load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
+                t_orders, ["o_custkey"], 8,
+                path=os.path.join(tmp, t_orders), sort_cols=["o_custkey"],
             )
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            if "Exchange" in plan:
-                raise RuntimeError(
-                    "bucketed join planned an Exchange — co-location lost:\n" + plan
+            write_bucketed(
+                load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
+                t_cust, ["c_custkey"], 8,
+                path=os.path.join(tmp, t_cust), sort_cols=["c_custkey"],
+            )
+            with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+                joined = spark.table(t_orders).join(
+                    spark.table(t_cust), F.col("o_custkey") == F.col("c_custkey")
                 )
-            out = joined.groupBy("c_mktsegment").agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                dec_sum("o_totalprice", 2).alias("total_price"),
-            )
-            # Eager: the catalog tables and files are dropped on return.
-            return out.localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_cust}")
-        shutil.rmtree(tmp, ignore_errors=True)
+                plan = joined._jdf.queryExecution().executedPlan().toString()
+                if "Exchange" in plan:
+                    raise RuntimeError(
+                        "bucketed join planned an Exchange — co-location lost:\n" + plan
+                    )
+                out = joined.groupBy("c_mktsegment").agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    dec_sum("o_totalprice", 2).alias("total_price"),
+                )
+                # Eager: the catalog tables and files are dropped on return.
+                return out.localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_cust}")
 
 
 @query(
@@ -204,17 +187,11 @@ def upsert_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table, so replaced rows, moved rows (and the absence of their
     stale old copies), inserted rows, removed rows, and untouched
     partitions are all inside the verified loop — the incremental-refresh counterpart to
-    roundtrip_partitioned_agg's full-rewrite gate.
-
-    Sink lands under SPARK_GRAFT_SINK_DIR like the other write-path gates;
-    the aggregate is eagerly checkpointed before the per-run directory is
-    deleted."""
+    roundtrip_partitioned_agg's full-rewrite gate."""
     from aws_etl_fiap_spark.sources.writers import upsert_partitioned
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=base)
-    path = os.path.join(tmp, "orders_merge")
-    try:
+    with scratch_sink("upsert_") as tmp:
+        path = os.path.join(tmp, "orders_merge")
         src = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
@@ -259,8 +236,6 @@ def upsert_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("o_totalprice", 2).alias("total_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _zorder_oracle() -> str:
@@ -357,15 +332,11 @@ def acid_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     A v1 reader that leaked post-commit files (lost isolation), a v1 row
     surviving into v2 wrongly, or a merge that dropped/duplicated anything
     hash-fails — the concurrent-reader consistency story the rename-swap
-    upsert cannot give.  Table lands under SPARK_GRAFT_SINK_DIR, both
-    aggregates are eagerly checkpointed before the per-run dir is
-    deleted."""
+    upsert cannot give."""
     from aws_etl_fiap_spark.sources import snapshot as snap
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="acid_", dir=base)
-    path = os.path.join(tmp, "orders_snap")
-    try:
+    with scratch_sink("acid_") as tmp:
+        path = os.path.join(tmp, "orders_snap")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -394,8 +365,6 @@ def acid_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = agg(pinned_v1, "v1").unionByName(agg(latest, "v2"))
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -440,10 +409,8 @@ def acid_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge: together they pin both sides of the CoW/MoR trade-off."""
     from aws_etl_fiap_spark.sources import snapshot as snap
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="acid_mor_", dir=base)
-    path = os.path.join(tmp, "orders_snap")
-    try:
+    with scratch_sink("acid_mor_") as tmp:
+        path = os.path.join(tmp, "orders_snap")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -475,8 +442,6 @@ def acid_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = agg(pinned_v1, "v1").unionByName(agg(latest, "v2"))
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -539,12 +504,10 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from aws_etl_fiap_spark.sources import snapshot as snap
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="mv_", dir=base)
-    path = os.path.join(tmp, "orders_snap")
     keys = ["o_orderstatus", "o_orderpriority"]
     sums = {"key_sum": ("o_orderkey", 0), "total_price": ("o_totalprice", 2)}
-    try:
+    with scratch_sink("mv_") as tmp:
+        path = os.path.join(tmp, "orders_snap")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
         )
@@ -598,8 +561,6 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_price").cast("double").alias("total_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -651,14 +612,11 @@ def acid_hidden_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     1997-01-01..02-15) a correct pruner must keep — prune too much and
     the aggregate loses rows, prune too little and the census mismatches.
     The row-level residual predicate is applied on top, the Iceberg
-    scan-plus-residual contract.  Table lands under SPARK_GRAFT_SINK_DIR;
-    output is eagerly checkpointed before the per-run dir is deleted."""
+    scan-plus-residual contract."""
     from aws_etl_fiap_spark.sources import snapshot as snap
 
-    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
-    tmp = tempfile.mkdtemp(prefix="hidpart_", dir=base)
-    path = os.path.join(tmp, "orders_part")
-    try:
+    with scratch_sink("hidpart_") as tmp:
+        path = os.path.join(tmp, "orders_part")
         src = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
         )
@@ -706,5 +664,3 @@ def acid_hidden_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_day_files_scanned", F.lit(n_d))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -23,7 +23,6 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from aws_etl_fiap_spark.operators.columns import (
     add_processing_date,
@@ -100,17 +99,3 @@ def collect_keys(
     raw = normalize_column_names(raw)
     raw = rename_date_fallback(raw)
     return add_processing_date(raw)
-
-
-def ingest_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    """S3: pandas -> Spark via Arrow (arrow conf enabled in session.py)."""
-    return spark.createDataFrame(pdf)
-
-
-def union_all(dfs: list[DataFrame]) -> DataFrame:
-    """U1: homogeneous union (the reference's pd.concat, b3_collector.py:72),
-    by name so column order differences can't corrupt data."""
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out

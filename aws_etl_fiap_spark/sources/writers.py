@@ -11,7 +11,11 @@ the table holds 100 TB and today's delta is 100 GB.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import contextlib
+import os
+import shutil
+import tempfile
+from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,6 +60,25 @@ def read_back(spark: SparkSession, path: str) -> DataFrame:
     """Round-trip scan (reference S5); partition columns come back from the
     directory layout."""
     return spark.read.parquet(path)
+
+
+@contextlib.contextmanager
+def scratch_sink(prefix: str) -> Iterator[str]:
+    """A fresh scratch directory for a write-then-read-back query, deleted
+    on exit whether the block returns or raises.
+
+    It lands under ``SPARK_GRAFT_SINK_DIR``, default the local temp dir.
+    With that default the query assumes local[*] mode: on a real cluster
+    executors cannot reach the driver's /tmp, so point SPARK_GRAFT_SINK_DIR
+    at shared storage (round-3 advice).  A frame returned from inside the
+    block must be localCheckpointed EAGERLY there, so the frame the caller
+    later collects no longer reads the deleted files."""
+    base = os.environ.get("SPARK_GRAFT_SINK_DIR") or tempfile.gettempdir()
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def write_bucketed(

@@ -16,15 +16,13 @@ For every query with an oracle, at sf0.001 (types are schema-level):
 Usage: python scripts/audit_types.py [--sf DIR] [--only a,b]
 """
 import argparse
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from aws_etl_fiap_spark.sources.readers import TABLES  # noqa: E402
 
 
 def canon(rows, cols):

@@ -25,11 +25,12 @@ Usage: python scripts/plan_audit.py [--sf DIR] [--out PLANS.md]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

@@ -7,16 +7,14 @@ sort columns by name, sort rows, compare str()-ized cells EXACTLY.
 Usage: python scripts/verify_driver.py [--only name1,name2] [--sf DIR]
 """
 import argparse
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from aws_etl_fiap_spark.sources.readers import TABLES  # noqa: E402
 
 
 def normalize(rows, cols):

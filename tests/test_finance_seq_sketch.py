@@ -750,14 +750,17 @@ def test_basket_pairs_matches_python_model_property(spark):
     @given(st.lists(row, min_size=1, max_size=16))
     def prop(rows):
         df = spark.createDataFrame(rows, "bk int, it string")
+        out = basket_pairs(df, "bk", "it", max_basket=MAXB, min_pair_count=MINP).collect()
         got = {
             (r.item_a, r.item_b): (
                 r.n_ab, r.support, r.confidence_a_to_b, r.lift
             )
-            for r in basket_pairs(
-                df, "bk", "it", max_basket=MAXB, min_pair_count=MINP
-            ).collect()
+            for r in out
         }
+        # The edge contract the graph loops rely on: each undirected pair
+        # once, oriented item_a < item_b (the dict would hide a duplicate).
+        assert len(out) == len(got)
+        assert all(r.item_a < r.item_b for r in out)
         assert got == model(rows)
 
     prop()

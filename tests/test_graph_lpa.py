@@ -221,45 +221,7 @@ def test_pagerank_and_triangles_match_models_property(spark):
     prop()
 
 
-def test_bfs_and_lpa_oriented_unique_paths_agree(spark):
-    """r14 optimization invariants: for an edge frame that already carries
-    each undirected pair exactly once with id_a < id_b (the pair-generator
-    contract), ``oriented_unique=True`` — which skips the symmetrize
-    distinct() — must produce the same result as the default path, for
-    both bfs_hops and label_propagation_communities."""
-    from aws_etl_fiap_spark.operators.graph import bfs_hops
-
-    clique1 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    clique2 = [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
-    edges = clique1 + clique2 + [(4, 10)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-
-    slow = {
-        (r["id"], r["hops"])
-        for r in bfs_hops(df, lambda c: c.isin(1, 10), max_hops=2).collect()
-    }
-    fast = {
-        (r["id"], r["hops"])
-        for r in bfs_hops(
-            df, lambda c: c.isin(1, 10), max_hops=2, oriented_unique=True
-        ).collect()
-    }
-    assert slow == fast and slow
-
-    lpa_slow = {
-        (r["id"], r["lab"])
-        for r in label_propagation_communities(df, iters=2).collect()
-    }
-    lpa_fast = {
-        (r["id"], r["lab"])
-        for r in label_propagation_communities(
-            df, iters=2, oriented_unique=True
-        ).collect()
-    }
-    assert lpa_slow == lpa_fast and lpa_slow
-
-
-def test_bfs_shuffle_fallback_matches_broadcast_path(spark):
+def test_bfs_shuffle_fallback_matches_broadcast_path(spark, monkeypatch):
     """Force the large-graph shuffle path (gate = 0) and require identical
     results — the r14 fallback-equivalence smoke in unit form."""
     import aws_etl_fiap_spark.operators.graph as G
@@ -271,15 +233,11 @@ def test_bfs_shuffle_fallback_matches_broadcast_path(spark):
         (r["id"], r["hops"])
         for r in G.bfs_hops(edges, lambda c: c == 1, max_hops=3).collect()
     }
-    old = G.BROADCAST_VERTEX_ROWS
-    try:
-        G.BROADCAST_VERTEX_ROWS = 0
-        got = {
-            (r["id"], r["hops"])
-            for r in G.bfs_hops(edges, lambda c: c == 1, max_hops=3).collect()
-        }
-    finally:
-        G.BROADCAST_VERTEX_ROWS = old
+    monkeypatch.setattr(G, "BROADCAST_VERTEX_ROWS", 0)
+    got = {
+        (r["id"], r["hops"])
+        for r in G.bfs_hops(edges, lambda c: c == 1, max_hops=3).collect()
+    }
     assert got == want == {(1, 0), (2, 1), (3, 2), (4, 3)}
 
 
@@ -299,23 +257,49 @@ def test_pagerank_many_iters_bounded_plan(spark):
         assert abs(v - 0.2) < 1e-12
 
 
+def _new_cached_rdds(spark, call):
+    """Run ``call()`` and return (its result, the cached RDD ids it left)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = call()
+    return out, set(jsc.getPersistentRDDs().keySet()) - before
+
+
 @pytest.mark.parametrize(
-    "iters, broadcast_ranks", [(20, None), (3, False)], ids=["broadcast", "shuffle"]
+    "iters, shuffle", [(20, False), (3, True)], ids=["broadcast", "shuffle"]
 )
-def test_pagerank_releases_superseded_rank_pins(spark, iters, broadcast_ranks):
+def test_pagerank_releases_superseded_rank_pins(spark, monkeypatch, iters, shuffle):
     """Only e, deg and the last rank pin stay cached after a call: every
     earlier rank pin is released once the next one has materialized (the
     broadcast path pins every 8th round, the shuffle path every round)."""
-    from aws_etl_fiap_spark.operators.graph import pagerank
+    import aws_etl_fiap_spark.operators.graph as G
 
+    if shuffle:
+        monkeypatch.setattr(G, "BROADCAST_VERTEX_ROWS", 0)
     e = [(a, b) for a in range(1, 6) for b in range(1, 6) if a != b]
     df = spark.createDataFrame(e, "src long, dst long")
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    out = pagerank(df, iters=iters, broadcast_ranks=broadcast_ranks)
-    new = set(jsc.getPersistentRDDs().keySet()) - before
+    out, new = _new_cached_rdds(spark, lambda: G.pagerank(df, iters=iters))
     assert len(new) <= 3, f"{len(new)} cached RDDs left by pagerank"
     ranks = {r["id"]: r["pr"] for r in out.collect()}
     assert len(ranks) == 5
     for v in ranks.values():
         assert abs(v - 0.2) < 1e-12
+
+
+@pytest.mark.parametrize("op", ["components", "lpa"])
+def test_label_loops_release_edge_pin(spark, op):
+    """Connected components and LPA leave exactly one cached RDD behind —
+    the returned label pin.  The edge pin and every superseded label
+    generation are released once no round reads them."""
+    import aws_etl_fiap_spark.operators.graph as G
+
+    # 6 oriented edges over 9 vertices: a 4-chain, one edge, a 3-path.
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (5, 21)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    calls = {
+        "components": lambda: G.connected_components(df, "id_a", "id_b"),
+        "lpa": lambda: G.label_propagation_communities(df, iters=2),
+    }
+    out, new = _new_cached_rdds(spark, calls[op])
+    assert len(new) == 1
+    assert out.count() == 9

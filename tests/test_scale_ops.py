@@ -203,6 +203,31 @@ def test_writepath_queries_honor_sink_dir_override(spark, sf_smoke, tmp_path, mo
     assert not stray, f"sink dirs ignored SPARK_GRAFT_SINK_DIR: {stray}"
 
 
+def test_scratch_sink_honors_override_and_always_cleans_up(tmp_path, monkeypatch):
+    """scratch_sink puts its directory under SPARK_GRAFT_SINK_DIR and
+    deletes it on normal exit and when the block raises (no Spark)."""
+    import os
+
+    import pytest
+
+    from aws_etl_fiap_spark.sources.writers import scratch_sink
+
+    monkeypatch.setenv("SPARK_GRAFT_SINK_DIR", str(tmp_path))
+    with scratch_sink("unit_") as d:
+        assert os.path.dirname(d) == str(tmp_path)
+        assert os.path.basename(d).startswith("unit_")
+        with open(os.path.join(d, "part-0"), "w") as fh:
+            fh.write("x")
+    assert not os.path.exists(d)
+
+    with pytest.raises(ValueError, match="boom"):
+        with scratch_sink("unit_") as d:
+            os.mkdir(os.path.join(d, "nested"))
+            raise ValueError("boom")
+    assert not os.path.exists(d)
+    assert os.listdir(tmp_path) == []
+
+
 def test_upsert_partitioned_merge_semantics(spark, tmp_path):
     """upsert_partitioned must replace matching keys, insert new ones,
     relocate partition-movers WITHOUT leaving the old copy behind, and drop
