@@ -15,9 +15,19 @@ Scale ladder (cheapest first):
                             This is the 100 TB fuzzy-dedup path.
 4. simhash_signatures     — 32-bit SRP over token hashes; hamming-adjacent
                             buckets for near-dup blocking.
+
+One owner per pair-generation step, so a filter added there reaches every
+tier: :func:`_gram_rows` / :func:`_gram_batches` (the Arrow n-gram
+generator; each caller keeps only its per-document emit), :func:`_pair_join`
+(every posting self-join but SimHash's), :func:`_shared_counts` (pin,
+sizes, df cap, self-join, shared count) and :func:`_jaccard` (the Jaccard
+scoring tail).
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -103,6 +113,42 @@ def token_shingles(text_col: str, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
+def _gram_batches(batches, emit, names: list[str]):
+    """Arrow batch loop of the n-gram generators over ``(doc, text)``
+    batches: NULL text emits nothing (like the expression path), else
+    ``emit(text.split(" "))`` gives one equal-length sequence per column in
+    ``names`` and ``doc`` repeats alongside (columnar lists, not row
+    tuples: shingling dominates every fuzzy-dedup pipeline)."""
+    import pandas as pd
+
+    for pdf in batches:
+        docs, cols = [], [[] for _ in names]
+        for doc, text in zip(pdf["doc"], pdf["text"]):
+            if text is None:
+                continue
+            vals = emit(text.split(" "))
+            docs.extend([doc] * len(vals[0]))
+            for col, v in zip(cols, vals):
+                col.extend(v)
+        yield pd.DataFrame({"doc": docs, **dict(zip(names, cols))})
+
+
+def _gram_rows(
+    df: DataFrame, id_col: str, text_col: str, emit, out: dict[str, str], spread: bool
+) -> DataFrame:
+    """:func:`_gram_batches` over the ``(doc, text)`` source as ``doc long``
+    plus the ``out`` columns (name -> Spark type)."""
+    names = list(out)
+
+    def gen(batches):
+        return _gram_batches(batches, emit, names)
+
+    src = df.select(_long_id(df, id_col).alias("doc"), F.col(text_col).alias("text"))
+    if spread:
+        src = spread_input(src)
+    return src.mapInPandas(gen, ", ".join(["doc long", *(f"{c} {t}" for c, t in out.items())]))
+
+
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, spread: bool = True
 ) -> DataFrame:
@@ -122,24 +168,11 @@ def shingle_rows(
     hashes — and the DuckDB oracle comparison — are unaffected. Documents
     with < n tokens emit nothing, the same full-grams-only semantics as the
     SQL oracle's positional self-join."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            docs, grams = [], []
-            for doc, text in zip(pdf["doc"], pdf["text"]):
-                if text is None:  # null doc emits nothing, like the HOF path
-                    continue
-                toks = text.split(" ")
-                seen = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-                docs.extend([doc] * len(seen))
-                grams.extend(seen)
-            yield pd.DataFrame({"doc": docs, "shingle": grams})
+    def emit(toks):
+        return ({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)},)
 
-    src = df.select(_long_id(df, id_col).alias("doc"), F.col(text_col).alias("text"))
-    if spread:
-        src = spread_input(src)
-    return src.mapInPandas(gen, "doc long, shingle string")
+    return _gram_rows(df, id_col, text_col, emit, {"shingle": "string"}, spread)
 
 
 def _df_capped(shingled: DataFrame, hash_col: str, max_df: int | None) -> DataFrame:
@@ -159,6 +192,72 @@ def _df_capped(shingled: DataFrame, hash_col: str, max_df: int | None) -> DataFr
         .select(hash_col)
     )
     return shingled.join(F.broadcast(bad), hash_col, "left_anti")
+
+
+def _pair_join(
+    postings: DataFrame,
+    keys: list[str],
+    left: dict[str, str],
+    right: dict[str, str],
+    directed: bool = False,
+) -> DataFrame:
+    """Self-join ``postings`` on equal ``keys``: every posting tier's
+    candidate-pair generator.  ``left`` / ``right`` rename each side's
+    columns and always map ``doc``; pairs keep left doc < right doc (each
+    unordered pair once), or ``!=`` when ``directed`` (containment).
+
+    The sides join as aliased subplans with qualified key refs: both derive
+    from one frame, and a bare ``a.sh == b.sh`` would lean on Spark's
+    trivially-true-equals self-join disambiguation (it logs a warning and
+    rewrites by position — fragile across versions).
+
+    Callers pin the frame ``postings`` derives from with
+    ``localCheckpoint(eager=False)``: both sides (and usually a size or df
+    aggregate) re-read it, and unpinned the upstream shingling runs once
+    per reader.  localCheckpoint, not ``persist()``: the ContextCleaner
+    releases its blocks once the frame is GC'd, so a long driver run does
+    not accumulate dead cache (round-1 advice)."""
+    a = postings.withColumnsRenamed(left).alias("__pa")
+    b = postings.withColumnsRenamed(right).alias("__pb")
+    ida, idb = F.col(left["doc"]), F.col(right["doc"])
+    same_keys = reduce(operator.and_, [F.col(f"__pa.{k}") == F.col(f"__pb.{k}") for k in keys])
+    return a.join(b, same_keys & ((ida != idb) if directed else (ida < idb)))
+
+
+def _shared_counts(
+    rows: DataFrame, key: str, max_df: int | None, left: str, right: str, directed: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """Shared-key counts per document pair over ``(doc, key)`` postings:
+    ``rows`` is pinned once (lazily, see :func:`_pair_join`), per-document
+    sizes count every key, and pairs come from the ``max_df``-capped
+    postings (:func:`_df_capped`), so a score over these is a lower bound
+    that is exact whenever no shared key is over-cap.  Returns ``(pairs,
+    sizes)``: ``(left, right, shared)`` and ``(doc, n)``."""
+    pinned = rows.localCheckpoint(eager=False)
+    sizes = pinned.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    pairs = (
+        _pair_join(_df_capped(pinned, key, max_df), [key], {"doc": left}, {"doc": right}, directed)
+        .groupBy(left, right)
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return pairs, sizes
+
+
+def _jaccard(pairs: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, shared)`` pairs scored against ``(doc, n)`` sizes:
+    |A∪B| = |A| + |B| - shared, kept where ``jaccard >= threshold``."""
+    sa = sizes.withColumnsRenamed({"doc": "id_a", "n": "na"})
+    sb = sizes.withColumnsRenamed({"doc": "id_b", "n": "nb"})
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("shared").cast("double") / (F.col("na") + F.col("nb") - F.col("shared")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "shared", "jaccard")
+    )
 
 
 #: Posting-list cap for the exact-Jaccard tier: shingles shared by more than
@@ -198,46 +297,14 @@ def ngram_jaccard_pairs(
     # dominant byte volume at scale). A count-corrupting collision needs two
     # distinct shingles with equal hash64 inside one joined doc pair
     # (~2^-64 * pairs — negligible).
-    # localCheckpoint (MEMORY_AND_DISK under the hood): this frame feeds
-    # three consumers (sizes + both self-join sides); without it the
-    # shingling recomputes per consumer — at any scale that's 3x the
-    # dominant cost. Unlike a bare persist(), the blocks are released by the
-    # ContextCleaner once the frame is GC'd, so an 85-query driver run
-    # doesn't accumulate dead cache (round-1 advice).
     # ``shingles``: a caller that ALSO consumes the (doc, shingle) frame
     # elsewhere passes its checkpointed copy so the dominant shingling
     # map-stage runs once across tiers (r14; mirrors minhash_lsh_pairs).
-    shingled = (
-        (shingles if shingles is not None else shingle_rows(df, id_col, text_col, n))
-        .select("doc", F.xxhash64("shingle").alias("sh"))
-        .localCheckpoint(eager=False)
+    rows = shingles if shingles is not None else shingle_rows(df, id_col, text_col, n)
+    pairs, sizes = _shared_counts(
+        rows.select("doc", F.xxhash64("shingle").alias("sh")), "sh", max_shingle_df, "id_a", "id_b"
     )
-    sizes = shingled.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    postings = _df_capped(shingled, "sh", max_shingle_df)
-    # Explicit plan aliases: both sides share the checkpointed postings
-    # lineage, and an attribute predicate like ``a.sh == b.sh`` would lean on
-    # Spark's trivially-true-equals self-join disambiguation (it logs a
-    # warning and rewrites by position — fragile across versions).  Qualified
-    # column refs against named subplans are unambiguous by construction.
-    a = postings.withColumnsRenamed({"doc": "id_a"}).alias("__ja")
-    b = postings.withColumnsRenamed({"doc": "id_b"}).alias("__jb")
-    pairs = (
-        a.join(b, (F.col("__ja.sh") == F.col("__jb.sh")) & (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.withColumnsRenamed({"doc": "id_a", "n_shingles": "na"})
-    sb = sizes.withColumnsRenamed({"doc": "id_b", "n_shingles": "nb"})
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double") / (F.col("na") + F.col("nb") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "shared", "jaccard")
-    )
+    return _jaccard(pairs, sizes, threshold)
 
 
 N_MINHASH = 32
@@ -338,29 +405,14 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ],
     )
-    # localCheckpoint, not persist: both self-join sides reuse the one
-    # materialization, and the blocks are released by the ContextCleaner when
-    # the frame is GC'd — a bare persist() leaks cache across an 85-query
-    # driver run (round-1 advice).
     stacked = banded.selectExpr(
         "doc",
         "stack({}, {}) as (band_id, band_hash)".format(
             bands, ", ".join(f"{b}, band_{b}" for b in range(bands))
         ),
     ).localCheckpoint(eager=False)
-    # Aliased like the ngram self-join above: both sides derive from the one
-    # checkpointed ``stacked`` frame, so qualified refs (not bare attribute
-    # equality) keep the band equi-join out of Spark's trivially-true-equals
-    # self-join rewrite.
-    a = stacked.withColumnsRenamed({"doc": "id_a"}).alias("__ba")
-    b = stacked.withColumnsRenamed({"doc": "id_b"}).alias("__bb")
     return (
-        a.join(
-            b,
-            (F.col("__ba.band_id") == F.col("__bb.band_id"))
-            & (F.col("__ba.band_hash") == F.col("__bb.band_hash"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
+        _pair_join(stacked, ["band_id", "band_hash"], {"doc": "id_a"}, {"doc": "id_b"})
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_matching_bands"))
     )
@@ -420,7 +472,7 @@ def verified_fuzzy_pairs(
         sh.select("doc", F.xxhash64("shingle").alias("h"))
         .localCheckpoint(eager=False)  # feeds sizes + both pair sides
     )
-    sizes = shingled.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = shingled.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
     postings = _df_capped(shingled, "h", max_shingle_df)
     sa = postings.select(F.col("doc").alias("id_a"), F.col("h").alias("ha"))
     sb = postings.select(F.col("doc").alias("__idb"), F.col("h").alias("hb"))
@@ -430,18 +482,7 @@ def verified_fuzzy_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    za = sizes.withColumnsRenamed({"doc": "id_a", "n_shingles": "na"})
-    zb = sizes.withColumnsRenamed({"doc": "id_b", "n_shingles": "nb"})
-    return (
-        shared.join(za, "id_a")
-        .join(zb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double") / (F.col("na") + F.col("nb") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "shared", "jaccard")
-    )
+    return _jaccard(shared, sizes, threshold)
 
 
 SIMHASH_BITS = 32
@@ -523,11 +564,19 @@ def simhash_pairs(
     the 4 bands identical, so no pair within the threshold is missed; pairs
     colliding on some band but differing by more are filtered by the exact
     popcount. This is the same band-join shape as MinHash-LSH — linear build,
-    collisions-only compare."""
+    collisions-only compare.  ``max_hamming >= 4`` raises ``ValueError``: a
+    pair 4 bits apart, one bit per band, shares no band, so the blocking
+    would silently miss it."""
     n_bands, band_bits = 4, SIMHASH_BITS // 4
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming must be < {n_bands} (the band count) for the "
+            f"pigeonhole recall guarantee, got {max_hamming}"
+        )
     mask = (1 << band_bits) - 1
-    # localCheckpoint, not persist: feeds both join sides, auto-released on
-    # GC instead of leaking cache across the driver run (round-1 advice).
+    # Pinned by :func:`_pair_join`'s rule but not joined through it: with the
+    # pair predicate inside the join condition, Catalyst would push the
+    # hamming filter in front of it — a different plan for the same rows.
     sigs = simhash_signatures(df, id_col, text_col, hash_family=hash_family).localCheckpoint(
         eager=False
     )
@@ -634,25 +683,9 @@ def containment_pairs(
     the default df cap the score is a lower bound, exact whenever no shared
     shingle is over-cap — mirrored 1:1 by the registered oracle.
     """
-    shingled = (
-        shingle_rows(df, id_col, text_col, n)
-        .select("doc", F.xxhash64("shingle").alias("sh"))
-        .localCheckpoint(eager=False)
-    )
-    sizes = shingled.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    postings = _df_capped(shingled, "sh", max_shingle_df)
-    a = postings.withColumnsRenamed({"doc": "inner_id"}).alias("__ca")
-    b = postings.withColumnsRenamed({"doc": "outer_id"}).alias("__cb")
-    pairs = (
-        a.join(
-            b,
-            (F.col("__ca.sh") == F.col("__cb.sh"))
-            & (F.col("inner_id") != F.col("outer_id")),
-        )
-        .groupBy("inner_id", "outer_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    si = sizes.withColumnsRenamed({"doc": "inner_id", "n_shingles": "n_inner"})
+    rows = shingle_rows(df, id_col, text_col, n).select("doc", F.xxhash64("shingle").alias("sh"))
+    pairs, sizes = _shared_counts(rows, "sh", max_shingle_df, "inner_id", "outer_id", directed=True)
+    si = sizes.withColumnsRenamed({"doc": "inner_id", "n": "n_inner"})
     return (
         pairs.join(si, "inner_id")
         .withColumn("containment", F.col("shared").cast("double") / F.col("n_inner"))
@@ -700,33 +733,14 @@ def winnow_fingerprints(
     """
     import hashlib
 
-    import pandas as pd
+    def emit(toks):
+        hs = [
+            int(hashlib.md5(" ".join(toks[i : i + k]).encode("utf-8")).hexdigest()[:15], 16)
+            for i in range(len(toks) - k + 1)
+        ]
+        return ({min(hs[i : i + w]) for i in range(len(hs) - w + 1)},)
 
-    def gen(batches):
-        for pdf in batches:
-            docs, fps = [], []
-            for doc, text in zip(pdf["doc"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                hs = [
-                    int(
-                        hashlib.md5(
-                            " ".join(toks[i : i + k]).encode("utf-8")
-                        ).hexdigest()[:15],
-                        16,
-                    )
-                    for i in range(len(toks) - k + 1)
-                ]
-                sel = {min(hs[i : i + w]) for i in range(len(hs) - w + 1)}
-                docs.extend([doc] * len(sel))
-                fps.extend(sel)
-            yield pd.DataFrame({"doc": docs, "fp": fps})
-
-    src = spread_input(
-        df.select(_long_id(df, id_col).alias("doc"), F.col(text_col).alias("text"))
-    )
-    return src.mapInPandas(gen, "doc long, fp long")
+    return _gram_rows(df, id_col, text_col, emit, {"fp": "long"}, spread=True)
 
 
 def winnow_overlap_pairs(
@@ -748,18 +762,11 @@ def winnow_overlap_pairs(
     Output: ``(id_a, id_b, shared, overlap)`` with ``id_a < id_b`` and
     ``overlap >= threshold``.
     """
-    fps = winnow_fingerprints(df, id_col, text_col, k, w).localCheckpoint(eager=False)
-    sizes = fps.groupBy("doc").agg(F.count(F.lit(1)).alias("n_fp"))
-    postings = _df_capped(fps, "fp", max_fp_df)
-    a = postings.withColumnsRenamed({"doc": "id_a"}).alias("__wa")
-    b = postings.withColumnsRenamed({"doc": "id_b"}).alias("__wb")
-    pairs = (
-        a.join(b, (F.col("__wa.fp") == F.col("__wb.fp")) & (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
+    pairs, sizes = _shared_counts(
+        winnow_fingerprints(df, id_col, text_col, k, w), "fp", max_fp_df, "id_a", "id_b"
     )
-    sa = sizes.withColumnsRenamed({"doc": "id_a", "n_fp": "na"})
-    sb = sizes.withColumnsRenamed({"doc": "id_b", "n_fp": "nb"})
+    sa = sizes.withColumnsRenamed({"doc": "id_a", "n": "na"})
+    sb = sizes.withColumnsRenamed({"doc": "id_b", "n": "nb"})
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
@@ -851,25 +858,14 @@ def positional_shingle_rows(
     emitted strings are ``" ".join`` of ``split(" ")`` slices, so a SQL
     positional re-derivation matches exactly.  Documents with < n tokens
     emit nothing."""
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            docs, poss, grams = [], [], []
-            for doc, text in zip(pdf["doc"], pdf["text"]):
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                for i in range(max(len(toks) - n + 1, 0)):
-                    docs.append(doc)
-                    poss.append(i)
-                    grams.append(" ".join(toks[i : i + n]))
-            yield pd.DataFrame({"doc": docs, "pos": poss, "shingle": grams})
+    def emit(toks):
+        pos = range(max(len(toks) - n + 1, 0))
+        return pos, [" ".join(toks[i : i + n]) for i in pos]
 
-    src = spread_input(
-        df.select(_long_id(df, id_col).alias("doc"), F.col(text_col).alias("text"))
+    return _gram_rows(
+        df, id_col, text_col, emit, {"pos": "long", "shingle": "string"}, spread=True
     )
-    return src.mapInPandas(gen, "doc long, pos long, shingle string")
 
 
 def shared_run_pairs(
@@ -917,22 +913,19 @@ def shared_run_pairs(
         .select("doc", "pos", F.xxhash64("shingle").alias("sh"))
         .localCheckpoint(eager=False)
     )
-    bad = (
-        shingled.groupBy("sh")
-        .agg(F.count_distinct("doc").alias("__df"))
-        .filter(F.col("__df") > max_gram_df)
-        .select("sh")
-    )
-    postings = (
-        shingled
-        if max_gram_df is None
-        else shingled.join(F.broadcast(bad), "sh", "left_anti")
-    )
-    a = postings.withColumnsRenamed({"doc": "doc_a", "pos": "pa"}).alias("__ra")
-    b = postings.withColumnsRenamed({"doc": "doc_b", "pos": "pb"}).alias("__rb")
-    m = a.join(
-        b,
-        (F.col("__ra.sh") == F.col("__rb.sh")) & (F.col("doc_a") < F.col("doc_b")),
+    postings = shingled
+    if max_gram_df is not None:
+        # Document frequency counts DISTINCT docs: unlike the set-valued
+        # tiers' postings (:func:`_df_capped`), a gram repeats per position.
+        bad = (
+            shingled.groupBy("sh")
+            .agg(F.count_distinct("doc").alias("__df"))
+            .filter(F.col("__df") > max_gram_df)
+            .select("sh")
+        )
+        postings = shingled.join(F.broadcast(bad), "sh", "left_anti")
+    m = _pair_join(
+        postings, ["sh"], {"doc": "doc_a", "pos": "pa"}, {"doc": "doc_b", "pos": "pb"}
     ).select("doc_a", "doc_b", "pa", "pb")
     md = m.withColumn("diag", F.col("pa") - F.col("pb"))
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")

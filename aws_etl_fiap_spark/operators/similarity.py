@@ -17,6 +17,11 @@ Scale design:
 - ``label_centroids``: per-label mean vector computed with an ORDERED running
   sum (order by vec_id) so the float sum is reproducible bit-for-bit on any
   engine/partitioning — unordered float SUM is not.
+
+The top-k tiers share one owner per step: :func:`_top_k` is the per-query
+rank tail of every tier (the global merge of any local-then-global pruning),
+:func:`_exact_rerank` the ADC shortlist plus exact-cosine re-rank of
+``pq_topk`` / ``ivfpq_topk``, and :func:`_pq_encode` their sub-code encoder.
 """
 
 from __future__ import annotations
@@ -74,6 +79,22 @@ def cosine_prenormed(a: Column, b: Column, norm_a: Column, norm_b: Column,
     return dot(a, b, dim) / (norm_a * norm_b)
 
 
+#: Output columns of the cosine-scored top-k tiers.
+_COSINE_TOPK_COLS = ["query_id", "neighbor_id", "cos_sim", "rank"]
+
+
+def _top_k(scored: DataFrame, k: int, score: Column, cols: list[str]) -> DataFrame:
+    """Per query, the ``k`` best ``scored`` rows under ``score`` (a sort
+    order, e.g. ``F.col("cos_sim").desc()``) with ``neighbor_id`` ascending
+    as the tiebreak, numbered 1..k in a ``rank`` column; returns ``cols``."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -107,12 +128,7 @@ def brute_force_topk(
             cosine_prenormed(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"), dim),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k, F.col("cos_sim").desc(), _COSINE_TOPK_COLS)
 
 
 def _unit_normed(df: DataFrame, idc: str, vec_col: str) -> DataFrame:
@@ -524,12 +540,7 @@ def ivf_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k, F.col("cos_sim").desc(), _COSINE_TOPK_COLS)
 
 
 def portable_planes_matrix(n_tables: int, n_planes: int, dim: int):
@@ -727,12 +738,7 @@ def lsh_bucket_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, k, F.col("cos_sim").desc(), _COSINE_TOPK_COLS)
 
 
 def quantize_int8(
@@ -1064,6 +1070,61 @@ def _pq_codebooks(sample, m: int, k: int, iters: int):
     return books
 
 
+def _pq_encode(mat, books):
+    """(n, dim) vectors -> (n, m) int32 sub-codes: per subvector the
+    nearest codebook entry.  argmin_c ||s - c||^2 == argmin_c (||c||^2 -
+    2 s.c) since the row norm is constant per row, so each subvector is one
+    BLAS gemm plus a broadcast add — no (batch, k, dsub) tensor."""
+    import numpy as np
+
+    m, _, dsub = books.shape
+    c2 = (books**2).sum(axis=2)  # (m, k)
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    for j in range(m):
+        sub = mat[:, j * dsub : (j + 1) * dsub]
+        codes[:, j] = np.argmin(c2[j][None, :] - 2.0 * (sub @ books[j].T), axis=1)
+    return codes
+
+
+def _exact_rerank(
+    scored: DataFrame,
+    k: int,
+    rerank: int,
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """ADC-scored ``(query_id, neighbor_id, adc_dist)`` rows -> exact top-k:
+    keep each query's ``max(k, rerank)`` nearest by ADC (a caller asking
+    ``rerank < k`` must still get k neighbors), pull the float vectors of
+    that broadcast shortlist back, and rank by the expression-fold cosine,
+    so cos_sim is bit-identical to :func:`brute_force_topk`."""
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    shortlist = (
+        scored.withColumn("__r", F.row_number().over(w_adc))
+        .filter(F.col("__r") <= max(k, rerank))
+        .select("query_id", "neighbor_id")
+    )
+    qv = queries.select(
+        F.col(query_id).cast("long").alias("query_id"),
+        as_double(vec_col).alias("__qv"),
+    )
+    cv = corpus.select(
+        F.col(corpus_id).cast("long").alias("neighbor_id"),
+        as_double(vec_col).alias("__cv"),
+    )
+    exact = (
+        cv.join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .withColumn("cos_sim", cosine(F.col("__qv"), F.col("__cv")))
+    )
+    return _top_k(exact, k, F.col("cos_sim").desc(), _COSINE_TOPK_COLS)
+
+
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1114,20 +1175,12 @@ def pq_topk(
 
     def encode_gen(batches):
         bk = bc_books.value
-        # argmin_c ||s - c||^2 == argmin_c (||c||^2 - 2 s.c): the row norm
-        # is constant per row, so the assignment is one BLAS gemm + a
-        # broadcast add per subvector — no (batch, k, dsub) tensor.
-        c2 = (bk**2).sum(axis=2)  # (m, k)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = np.argmin(c2[j][None, :] - 2.0 * (sub @ bk[j].T), axis=1)
             yield pd.DataFrame(
-                {"neighbor_id": pdf["__id"].values, "codes": list(codes)}
+                {"neighbor_id": pdf["__id"].values, "codes": list(_pq_encode(mat, bk))}
             )
 
     # NO spread_input here (r14 interleaved A/B: 3.11 s vs 3.93 s with) —
@@ -1177,45 +1230,10 @@ def pq_topk(
         score_gen, "query_id long, neighbor_id long, adc_dist double"
     )
     if not rerank:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+        return _top_k(
+            scored, k, F.col("adc_dist").asc(), ["query_id", "neighbor_id", "adc_dist", "rank"]
         )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "adc_dist", "rank")
-        )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("__r", F.row_number().over(w_adc))
-        # max(k, rerank), matching ivfpq_topk and the batch-local keep
-        # above: a caller asking rerank < k must still get k neighbors.
-        .filter(F.col("__r") <= max(k, rerank))
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(query_id).cast("long").alias("query_id"),
-        as_double(vec_col).alias("__qv"),
-    )
-    cv = corpus.select(
-        F.col(corpus_id).cast("long").alias("neighbor_id"),
-        as_double(vec_col).alias("__cv"),
-    )
-    exact = (
-        cv.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cos_sim", cosine(F.col("__qv"), F.col("__cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _exact_rerank(scored, k, rerank, queries, corpus, query_id, corpus_id, vec_col)
 
 
 def ivfpq_topk(
@@ -1269,24 +1287,16 @@ def ivfpq_topk(
 
     def index_gen(batches):
         c_mat, bk = bc.value
-        c2 = (bk**2).sum(axis=2)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.array(pdf["__v"].tolist(), dtype=np.float64)
             cell = np.argmax(mat @ c_mat.T, axis=1)
-            res = mat - c_mat[cell]
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                sub = res[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = np.argmin(
-                    c2[j][None, :] - 2.0 * (sub @ bk[j].T), axis=1
-                )
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["__id"].values,
                     "cell": cell.astype(np.int32),
-                    "codes": list(codes),
+                    "codes": list(_pq_encode(mat - c_mat[cell], bk)),
                 }
             )
 
@@ -1372,35 +1382,7 @@ def ivfpq_topk(
     scored = joined.mapInPandas(
         score_gen, "query_id long, neighbor_id long, adc_dist double"
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("__r", F.row_number().over(w_adc))
-        .filter(F.col("__r") <= max(k, rerank))
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(query_id).cast("long").alias("query_id"),
-        as_double(vec_col).alias("__qv"),
-    )
-    cv = corpus.select(
-        F.col(corpus_id).cast("long").alias("neighbor_id"),
-        as_double(vec_col).alias("__cv"),
-    )
-    exact = (
-        cv.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cos_sim", cosine(F.col("__qv"), F.col("__cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _exact_rerank(scored, k, rerank, queries, corpus, query_id, corpus_id, vec_col)
 
 
 def semdedup_keep(
@@ -1556,11 +1538,11 @@ def hard_negative_topk(
         "cos_sim",
         cosine_prenormed(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"), dim),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "query_label", "neighbor_id", "neg_label", "cos_sim", "rank")
+    return _top_k(
+        scored,
+        k,
+        F.col("cos_sim").desc(),
+        ["query_id", "query_label", "neighbor_id", "neg_label", "cos_sim", "rank"],
     )
 
 

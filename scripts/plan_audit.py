@@ -85,7 +85,7 @@ def main() -> None:
     with open(args.out, "w") as fh:
         fh.write(
             "# Physical-plan inventory (generated by scripts/plan_audit.py)\n\n"
-            f"{len(rows)} query plans at {args.sf}, {took:.0f}s.  Columns:\n"
+            f"{len(rows)} query plans at {args.sf}.  Columns:\n"
             "scans / scans-with-pushed-filters, joins (BHJ broadcast, SMJ\n"
             "sort-merge, SHJ shuffled-hash, BNLJ nested-loop), CART cartesian,\n"
             "EXCH exchanges, PARTIAL map-side partial-aggregate functions\n"

@@ -4,6 +4,7 @@ Jaccard identifies."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_fiap_spark.operators.dedup import (
@@ -520,6 +521,65 @@ def test_minhash_lsh_rejects_bad_band_counts(spark):
         minhash_lsh_pairs(df, "doc_id", "text", n_hashes=32, bands=5)
     with pytest.raises(ValueError, match="bands must divide"):
         minhash_lsh_pairs(df, "doc_id", "text", n_hashes=32, bands=64)
+
+
+def test_simhash_pairs_rejects_hamming_beyond_band_recall(spark):
+    """4 bands of 8 bits: a pair 4 bits apart, one bit per band, shares no
+    band and would be silently missed, so max_hamming >= 4 is refused."""
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    for bad in (4, 5):
+        with pytest.raises(ValueError, match="max_hamming must be < 4"):
+            simhash_pairs(df, "doc_id", "text", max_hamming=bad)
+    assert simhash_pairs(df, "doc_id", "text", max_hamming=3).collect() == []
+
+
+@pytest.mark.parametrize("tier", ["shingle", "winnow", "positional"])
+def test_gram_batches_in_process_equals_spark_arrow_path(spark, monkeypatch, tier):
+    """Arrow twin: the n-gram batch loop run in-process over ``toPandas()``
+    of the (doc, text) source equals what Spark's ``mapInPandas`` emits for
+    the same emit, over a NULL text, a document shorter than the gram
+    width, an empty batch and zero-row partitions."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from aws_etl_fiap_spark.operators import dedup as D
+
+    wired = {}
+    real = D._gram_rows
+
+    def spy(df, id_col, text_col, emit, out, spread):
+        wired.update(emit=emit, names=list(out))
+        return real(df, id_col, text_col, emit, out, spread)
+
+    monkeypatch.setattr(D, "_gram_rows", spy)
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, None),
+        (3, "x y"),
+        (4, "a b a b a b a b a b"),
+        (5, "the quick brown fox sleeps under the lazy dog today"),
+    ]
+    # 8 partitions for 5 rows: at least 3 are empty (zero-row partitions)
+    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(8)
+    generate = {
+        "shingle": lambda: D.shingle_rows(df, "doc_id", "text", n=3),
+        "winnow": lambda: D.winnow_fingerprints(df, "doc_id", "text"),
+        "positional": lambda: D.positional_shingle_rows(df, "doc_id", "text", n=3),
+    }[tier]
+    got = generate().toPandas()
+
+    src = df.select(F.col("doc_id").alias("doc"), "text").toPandas()
+    batches = [src.iloc[:0], src.iloc[:2], src.iloc[2:]]
+    frames = list(D._gram_batches(iter(batches), wired["emit"], wired["names"]))
+    cols = ["doc", *wired["names"]]
+    assert list(frames[0].columns) == cols and len(frames[0]) == 0  # empty batch
+    want = pd.concat([f for f in frames if len(f)], ignore_index=True)
+    assert len(want) > 0
+
+    def norm(pdf):
+        return pdf[cols].sort_values(cols).reset_index(drop=True)
+
+    assert_frame_equal(norm(got), norm(want))
 
 
 def test_posting_tiers_refuse_non_integral_ids(spark):

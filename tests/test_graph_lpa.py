@@ -163,6 +163,19 @@ def test_graph_operators_match_models_property(spark):
         }
         assert got_bfs == set(bfs_model(e, seeds, 2).items())
 
+        # CC and BFS take edges in any direction and multiplicity: every
+        # pair twice plus its reversed copy must not change either result.
+        # (LPA stays on unique oriented edges: duplicates double its votes.)
+        noisy = spark.createDataFrame(e + e + [(b, a) for a, b in e], "id_a int, id_b int")
+        assert {
+            (r["id"], r["comp"])
+            for r in connected_components(noisy, "id_a", "id_b").collect()
+        } == got_cc
+        assert {
+            (r["id"], r["hops"])
+            for r in bfs_hops(noisy, lambda c: c % 3 == 0, max_hops=2).collect()
+        } == got_bfs
+
     prop()
 
 

@@ -17,38 +17,18 @@ test is the cheap always-on guard.
 from __future__ import annotations
 
 import duckdb
-import pytest
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-SF_DIR = "/root/testdata/sf0.001"
 BANNED = {"HUGEINT", "UHUGEINT"}
 
 
-def _oracles():
+def test_no_oracle_emits_hugeint(duck_smoke):
     from aws_etl_fiap_spark import queries  # noqa: F401  (populate REGISTRY)
     from aws_etl_fiap_spark.queries.registry import REGISTRY
 
-    return {n: d.oracle for n, d in REGISTRY.items() if d.oracle}
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return c
-
-
-def test_no_oracle_emits_hugeint(con):
     bad = {}
-    for name, sql in _oracles().items():
+    for name, d in REGISTRY.items():
         try:
-            cols = con.execute(f"DESCRIBE {sql}").fetchall()
+            cols = duck_smoke.execute(f"DESCRIBE {d.oracle}").fetchall()
         except duckdb.Error as ex:  # pragma: no cover - surfaced as failure
             bad[name] = f"DESCRIBE failed: {ex}"
             continue
