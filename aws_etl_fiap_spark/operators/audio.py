@@ -90,6 +90,8 @@ def wav_decode(data: bytes):
         )
     if channels < 1:
         raise WavFormatError("zero channels")
+    if sample_rate < 1:
+        raise WavFormatError("zero sample rate")
     if len(pcm) % (2 * channels) != 0:
         raise WavFormatError("data length not divisible by frame size")
     samples = np.frombuffer(pcm, dtype="<i2").reshape(-1, channels)

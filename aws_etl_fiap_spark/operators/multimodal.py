@@ -18,7 +18,17 @@ Design for 100 TB of media:
   the deterministic digest codec that the oracle-gated driver queries
   hash against, and compressed audio/video fail loudly (ffmpeg/librosa
   are not installed) with per-row ok=false degradation instead of job
-  death.
+  death;
+- every per-payload Arrow stage runs through ONE batch loop,
+  :func:`_map_payloads` / :func:`_payload_batches`: an operator states only
+  its output schema and a per-row function that returns zero or more
+  output tuples for one row.  The poison rule lives there once: a NULL
+  payload, or a row whose function raises one of ``_POISON``
+  (``ValueError`` — the Png/Wav/AviFormatError family subclasses it — or
+  ``NotImplementedError`` for codecs behind the tiered boundary), yields
+  the operator's own poison outcome — a degraded ``ok=false`` row with
+  NULLs, or no rows for the one-to-many operators.  Poison rows degrade;
+  they never kill the job.
 """
 
 from __future__ import annotations
@@ -128,38 +138,59 @@ def decode_payload(mime: str, payload: bytes) -> list[float]:
     )
 
 
-def extract_features(df: DataFrame, batch_limit: int = 1024) -> DataFrame:
-    """Decode + featurize via mapInPandas (Arrow batches, vectorized I/O).
+_POISON = (ValueError, NotImplementedError)
 
-    Per-row failures degrade to ok=false + NULL feature instead of killing
-    the 100 TB job; ``batch_limit`` bounds peak Python memory per batch when
-    payloads are large.
-    """
+
+def _payload_batches(batches, schema: str, row_fn, poison, catch=_POISON):
+    """The Arrow batch loop behind every per-payload operator.
+
+    Each row of a non-empty batch arrives as its selected columns in order,
+    the LAST being the binary payload: a NULL payload yields
+    ``poison(*row)``; otherwise ``row_fn(*row)`` (payload as ``bytes``)
+    yields the row's output tuples, and an exception in ``catch`` yields
+    ``poison(*row)`` instead.  One pandas frame per batch, named after the
+    flat DDL ``schema`` (no nested types, so its fields split on commas)."""
+    names = [field.split()[0] for field in schema.split(",")]
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        rows = []
+        for row in zip(*(pdf[c] for c in pdf.columns)):
+            *key, payload = row
+            if payload is None:
+                rows.extend(poison(*row))
+                continue
+            try:
+                rows.extend(row_fn(*key, bytes(payload)))
+            except catch:
+                rows.extend(poison(*row))
+        yield pd.DataFrame(rows, columns=names)
+
+
+def _map_payloads(
+    df: DataFrame, cols, schema: str, row_fn, *, poison, catch=_POISON
+) -> DataFrame:
+    """``df.select(*cols)`` through :func:`_payload_batches` as one
+    ``mapInPandas`` stage with output ``schema``; ``cols`` ends with the
+    payload column."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
-                feats, oks = [], []
-                for mime, payload in zip(chunk["mime"], chunk["payload"]):
-                    try:
-                        feats.append(decode_payload(mime, bytes(payload)))
-                        oks.append(True)
-                    except (NotImplementedError, ValueError):
-                        # unsupported codec OR malformed payload: poison
-                        # rows degrade, they never kill the 100 TB job
-                        feats.append(None)
-                        oks.append(False)
-                yield pd.DataFrame(
-                    {
-                        "media_id": chunk["media_id"].values,
-                        "mime": chunk["mime"].values,
-                        "ok": oks,
-                        "feature": feats,
-                    }
-                )
+        return _payload_batches(batches, schema, row_fn, poison, catch)
 
-    return df.select("media_id", "mime", "payload").mapInPandas(run, schema=FEATURE_SCHEMA)
+    return df.select(*cols).mapInPandas(run, schema=schema)
+
+
+def extract_features(df: DataFrame) -> DataFrame:
+    """Decode + featurize every payload through :func:`decode_payload`;
+    poison rows are ok=false with a NULL feature."""
+
+    def row(mid, mime, payload):
+        return [(mid, mime, True, decode_payload(mime, payload))]
+
+    return _map_payloads(
+        df, ["media_id", "mime", "payload"], FEATURE_SCHEMA, row,
+        poison=lambda mid, mime, _: [(mid, mime, False, None)],
+    )
 
 
 FRAME_BYTES = 16
@@ -167,41 +198,34 @@ FRAME_SCHEMA = "media_id bigint, frame_idx int, frame_digest string"
 RESIZE_SCHEMA = "media_id bigint, mime string, width int, height int, ok boolean, payload binary"
 
 
-def frame_sample(df: DataFrame, every_n: int = 4, batch_limit: int = 1024) -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
     """Sample every ``every_n``-th frame from video-like payloads — the
     one-to-MANY media shape (a row fans out to a row per kept frame).
 
     ``fake/*`` payloads model a video as consecutive FRAME_BYTES-sized
     frames; real codecs would seek keyframes instead (same dataflow, stubbed
-    codec). Emitted rows carry a per-frame digest, never the frame bytes:
-    downstream dedup/indexing works on fixed-width rows while the heavy
-    payload column dies at this operator's input, which is what keeps the
-    shuffle volume sane at 100 TB of video.
+    codec), so other mimes are routed away with no rows. Emitted rows carry
+    a per-frame digest, never the frame bytes: downstream dedup/indexing
+    works on fixed-width rows while the heavy payload column dies at this
+    operator's input, which is what keeps the shuffle volume sane at 100 TB
+    of video.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
-                ids, idxs, digests = [], [], []
-                for media_id, mime, payload in zip(
-                    chunk["media_id"], chunk["mime"], chunk["payload"]
-                ):
-                    if not mime.startswith("fake/"):
-                        continue  # real codecs unavailable; route, don't crash
-                    raw = bytes(payload)
-                    n_frames = len(raw) // FRAME_BYTES
-                    for i in range(0, n_frames, every_n):
-                        frame = raw[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
-                        ids.append(media_id)
-                        idxs.append(i)
-                        digests.append(hashlib.sha256(frame).hexdigest())
-                yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame_digest": digests})
+    def row(mid, mime, raw):
+        if not mime.startswith("fake/"):
+            return []  # real codecs unavailable; route, don't crash
+        return [
+            (mid, i, hashlib.sha256(raw[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]).hexdigest())
+            for i in range(0, len(raw) // FRAME_BYTES, every_n)
+        ]
 
-    return df.select("media_id", "mime", "payload").mapInPandas(run, schema=FRAME_SCHEMA)
+    return _map_payloads(
+        df, ["media_id", "mime", "payload"], FRAME_SCHEMA, row,
+        poison=lambda *_: [], catch=(),
+    )
 
 
-def resize_media(df: DataFrame, width: int, height: int, batch_limit: int = 1024) -> DataFrame:
+def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
     """Resize payloads to ``width x height`` — the payload-in/payload-out
     shape (output stays binary for the next pipeline stage).
 
@@ -211,50 +235,26 @@ def resize_media(df: DataFrame, width: int, height: int, batch_limit: int = 1024
     stability.  ``image/png`` payloads take the REAL path: decode
     (operators/imaging, zero-dependency), nearest-neighbor resample with a
     deterministic integer index map, re-encode PNG — the output is a valid
-    PNG of the requested dimensions.  Unsupported mimes and malformed
-    payloads degrade to ok=false + NULL payload per row (a poison image
-    must not kill a 100 TB job)."""
+    PNG of the requested dimensions.  Unsupported mimes and poison rows are
+    ok=false with a NULL payload."""
+    from aws_etl_fiap_spark.operators import imaging
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from aws_etl_fiap_spark.operators import imaging
+    def poison(mid, mime, _):
+        return [(mid, mime, width, height, False, None)]
 
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
-                payloads, oks = [], []
-                for mime, payload in zip(chunk["mime"], chunk["payload"]):
-                    if mime.startswith("fake/"):
-                        seed = hashlib.sha256(
-                            bytes(payload) + f"|{width}x{height}".encode()
-                        ).digest()
-                        need = width * height
-                        out = (seed * (need // len(seed) + 1))[:need]
-                        payloads.append(out)
-                        oks.append(True)
-                    elif mime == "image/png":
-                        try:
-                            img = imaging.decode_png(bytes(payload))
-                            small = imaging.resize_nearest(img, width, height)
-                            payloads.append(imaging.encode_png(small))
-                            oks.append(True)
-                        except (imaging.PngFormatError, ValueError):
-                            payloads.append(None)
-                            oks.append(False)
-                    else:
-                        payloads.append(None)
-                        oks.append(False)
-                yield pd.DataFrame(
-                    {
-                        "media_id": chunk["media_id"].values,
-                        "mime": chunk["mime"].values,
-                        "width": width,
-                        "height": height,
-                        "ok": oks,
-                        "payload": payloads,
-                    }
-                )
+    def row(mid, mime, raw):
+        if mime.startswith("fake/"):
+            seed = hashlib.sha256(raw + f"|{width}x{height}".encode()).digest()
+            need = width * height
+            out = (seed * (need // len(seed) + 1))[:need]
+        elif mime == "image/png":
+            small = imaging.resize_nearest(imaging.decode_png(raw), width, height)
+            out = imaging.encode_png(small)
+        else:
+            return poison(mid, mime, raw)
+        return [(mid, mime, width, height, True, out)]
 
-    return df.select("media_id", "mime", "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _map_payloads(df, ["media_id", "mime", "payload"], RESIZE_SCHEMA, row, poison=poison)
 
 
 def documents_as_media(df: DataFrame) -> DataFrame:
@@ -273,7 +273,8 @@ def write_payload_files(df: DataFrame, path: str, id_col: str = "media_id",
     """Materialize each binary payload as its own ``<id>.bin`` file under
     ``path`` — the on-disk shape real media corpora arrive in (one object
     per image/audio clip), written distributed via Arrow batches (no
-    driver collect, no per-row pickling).  Returns the file count.
+    driver collect, no per-row pickling).  Returns the file count; a NULL
+    payload writes no file.
 
     Executors must share ``path``'s filesystem (true on local[*] and on any
     cluster writing to a mounted object store/NFS — same assumption as the
@@ -287,9 +288,11 @@ def write_payload_files(df: DataFrame, path: str, id_col: str = "media_id",
         n = 0
         for pdf in batches:
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+                if payload is None:
+                    continue
                 with open(os.path.join(path, f"{int(mid):012d}.bin"), "wb") as fh:
                     fh.write(bytes(payload))
-            n += len(pdf)
+                n += 1
         yield pd.DataFrame({"n": [n]})
 
     counts = df.select(id_col, payload_col).mapInPandas(dump, "n long")
@@ -313,6 +316,23 @@ def read_payload_files(spark, path: str) -> DataFrame:
     )
 
 
+def _documents_as(df: DataFrame, mime: str, encode) -> DataFrame:
+    """``(media_id, mime, payload)`` with ``payload = encode(text bytes)``
+    per document; NULL text gives a NULL payload."""
+    return _map_payloads(
+        df,
+        [
+            F.col("doc_id").alias("media_id"),
+            F.lit(mime).alias("mime"),
+            F.encode(F.col("text"), "UTF-8").alias("raw"),
+        ],
+        "media_id long, mime string, payload binary",
+        lambda mid, kind, raw: [(mid, kind, encode(raw))],
+        poison=lambda mid, kind, _: [(mid, kind, None)],
+        catch=(),
+    )
+
+
 def documents_as_wav(df: DataFrame, sample_rate: int = 8000) -> DataFrame:
     """Adapter: synthesize a REAL RIFF/WAVE PCM16 payload per document,
     deterministically from its UTF-8 bytes —
@@ -324,35 +344,16 @@ def documents_as_wav(df: DataFrame, sample_rate: int = 8000) -> DataFrame:
     the same samples from hex(encode(text))).  Arrow-batched; the payload
     column is real enough to open in any audio tool."""
     import numpy as np
-    import pandas as pd
 
     from aws_etl_fiap_spark.operators.audio import wav_encode
 
-    src = df.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio/wav").alias("mime"),
-        F.encode(F.col("text"), "UTF-8").alias("raw"),
-    )
+    def encode(raw):
+        b = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        i = np.arange(1, len(b) + 1, dtype=np.int64)
+        s = ((b * 37 + i * 11) % 256 - 128) * 256
+        return wav_encode(s.astype(np.int16), sample_rate)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw in pdf["raw"]:
-                b = np.frombuffer(bytes(raw), dtype=np.uint8).astype(np.int64)
-                i = np.arange(1, len(b) + 1, dtype=np.int64)
-                s = ((b * 37 + i * 11) % 256 - 128) * 256
-                payloads.append(wav_encode(s.astype(np.int16), sample_rate))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "mime": pdf["mime"].to_numpy(),
-                    "payload": payloads,
-                }
-            )
-
-    return src.mapInPandas(gen, "media_id long, mime string, payload binary")
+    return _documents_as(df, "audio/wav", encode)
 
 
 def documents_as_avi(
@@ -371,77 +372,43 @@ def documents_as_avi(
     staying exactly reproducible.  Arrow-batched; payloads never shuffle
     out of the generating stage's consumers."""
     import numpy as np
-    import pandas as pd
 
     from aws_etl_fiap_spark.operators.video import avi_encode
 
-    src = df.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video/avi").alias("mime"),
-        F.encode(F.col("text"), "UTF-8").alias("raw"),
-    )
-    n_px = n_frames * height * width * 3
+    # Document-independent index math, computed once: only b[i % len(b)]
+    # varies with the text.
+    i = np.arange(n_frames * height * width * 3, dtype=np.int64)
+    add = (i // (height * width * 3)) * 17 + i * 7
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Document-independent index math hoisted out of the per-row loop:
-        # only b[i % len(b)] varies with the text.
-        i = np.arange(n_px, dtype=np.int64)
-        add = (i // (height * width * 3)) * 17 + i * 7
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw in pdf["raw"]:
-                b = np.frombuffer(bytes(raw) or b"\x00", dtype=np.uint8)
-                p = (b[i % len(b)].astype(np.int64) * 31 + add) % 256
-                frames = p.astype(np.uint8).reshape(n_frames, height, width, 3)
-                payloads.append(avi_encode(frames, fps=fps))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "mime": pdf["mime"].to_numpy(),
-                    "payload": payloads,
-                }
-            )
+    def encode(raw):
+        b = np.frombuffer(raw or b"\x00", dtype=np.uint8)
+        p = (b[i % len(b)].astype(np.int64) * 31 + add) % 256
+        return avi_encode(p.astype(np.uint8).reshape(n_frames, height, width, 3), fps=fps)
 
-    return src.mapInPandas(gen, "media_id long, mime string, payload binary")
+    return _documents_as(df, "video/avi", encode)
 
 
 def video_meta(df: DataFrame) -> DataFrame:
     """Parse AVI payload HEADERS only (operators/video.avi_meta — real
     RIFF/hdrl chunk walk, frame data untouched) and emit the routing
     metadata a 100 TB video pipeline plans on: geometry, frame count, fps,
-    and the exact container byte size.  Undecodable payloads degrade to
-    ok=false poison rows (same policy as audio_stats); payload bytes never
-    leave the Arrow stage."""
-    import pandas as pd
+    and the exact container byte size.  Poison rows are ok=false with NULL
+    metadata but keep ``n_bytes``; payload bytes never leave the Arrow
+    stage."""
+    from aws_etl_fiap_spark.operators.video import avi_meta
 
-    from aws_etl_fiap_spark.operators.video import AviFormatError, avi_meta
+    def row(mid, raw):
+        m = avi_meta(raw)
+        return [(mid, True, m["width"], m["height"], m["n_frames"], m["fps"], len(raw))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    m = avi_meta(raw)
-                    rows.append((int(mid), True, m["width"], m["height"],
-                                 m["n_frames"], m["fps"], len(raw)))
-                except (AviFormatError, NotImplementedError):
-                    rows.append((int(mid), False, None, None, None, None,
-                                 len(raw)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "ok", "width", "height", "n_frames",
-                         "fps", "n_bytes"],
-            )
+    def poison(mid, payload):
+        return [(mid, False, None, None, None, None, None if payload is None else len(payload))]
 
-    return df.select("media_id", "payload").mapInPandas(
-        run,
+    return _map_payloads(
+        df, ["media_id", "payload"],
         "media_id long, ok boolean, width int, height int, n_frames long, "
         "fps int, n_bytes long",
+        row, poison=poison,
     )
 
 
@@ -453,79 +420,49 @@ def video_frame_stats(df: DataFrame) -> DataFrame:
     sum(p_i * (i+1)) — so a BGR swap, a row flip, or a stride-padding leak
     each breaks the hash even when the plain sum would cancel.  One-to-many
     like audio_energy_windows: payloads die at this operator's input, only
-    fixed-width frame rows shuffle; undecodable payloads contribute no
-    frames (poison rows are the meta tier's job)."""
+    fixed-width frame rows shuffle; poison rows contribute no frames
+    (ok=false rows are the meta tier's job)."""
     import numpy as np
-    import pandas as pd
 
-    from aws_etl_fiap_spark.operators.video import AviFormatError, avi_decode
+    from aws_etl_fiap_spark.operators.video import avi_decode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, fidx, psum, pmax, pmin, pchk = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, frames = avi_decode(bytes(payload))
-                except (AviFormatError, NotImplementedError):
-                    continue  # undecodable payloads contribute no frames
-                flat = frames.reshape(len(frames), -1).astype(np.int64)
-                w = np.arange(1, flat.shape[1] + 1, dtype=np.int64)
-                for f in range(len(flat)):
-                    ids.append(int(mid))
-                    fidx.append(f)
-                    psum.append(int(flat[f].sum()))
-                    pmax.append(int(flat[f].max()))
-                    pmin.append(int(flat[f].min()))
-                    pchk.append(int((flat[f] * w).sum()))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": fidx, "sum_px": psum,
-                 "max_px": pmax, "min_px": pmin, "pos_checksum": pchk}
-            )
+    def row(mid, raw):
+        _, frames = avi_decode(raw)
+        flat = frames.reshape(len(frames), -1).astype(np.int64)
+        w = np.arange(1, flat.shape[1] + 1, dtype=np.int64)
+        return [
+            (mid, f, int(px.sum()), int(px.max()), int(px.min()), int((px * w).sum()))
+            for f, px in enumerate(flat)
+        ]
 
-    return df.select("media_id", "payload").mapInPandas(
-        run,
+    return _map_payloads(
+        df, ["media_id", "payload"],
         "media_id long, frame_idx int, sum_px long, max_px long, "
         "min_px long, pos_checksum long",
+        row, poison=lambda *_: [],
     )
 
 
 def audio_stats(df: DataFrame) -> DataFrame:
     """Decode WAV payloads (operators/audio.wav_decode — real RIFF chunk
-    walk) and emit the classic PCM stats per row; undecodable payloads
-    degrade to ok=false poison rows instead of failing the job (same policy
-    as extract_features).  sum_sq stays an exact BIGINT so RMS derivation
+    walk) and emit the classic PCM stats per row; poison rows are ok=false
+    with NULL stats.  sum_sq stays an exact BIGINT so RMS derivation
     downstream is one correctly-rounded float op."""
-    import pandas as pd
+    from aws_etl_fiap_spark.operators.audio import wav_stats
 
-    from aws_etl_fiap_spark.operators.audio import WavFormatError, wav_stats
+    keys = ("sample_rate", "channels", "n_frames", "duration_ms", "peak",
+            "zero_cross", "sum_sq")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    st = wav_stats(bytes(payload))
-                    rows.append((int(mid), True, st["sample_rate"], st["channels"],
-                                 st["n_frames"], st["duration_ms"], st["peak"],
-                                 st["zero_cross"], st["sum_sq"]))
-                except (WavFormatError, NotImplementedError):
-                    rows.append((int(mid), False, None, None, None, None, None,
-                                 None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "ok", "sample_rate", "channels", "n_frames",
-                         "duration_ms", "peak", "zero_cross", "sum_sq"],
-            )
+    def row(mid, raw):
+        st = wav_stats(raw)
+        return [(mid, True, *(st[k] for k in keys))]
 
-    return df.select("media_id", "payload").mapInPandas(
-        run,
+    return _map_payloads(
+        df, ["media_id", "payload"],
         "media_id long, ok boolean, sample_rate int, channels int, "
         "n_frames long, duration_ms long, peak long, zero_cross long, "
         "sum_sq long",
+        row, poison=lambda mid, _: [(mid, False) + (None,) * len(keys)],
     )
 
 
@@ -533,34 +470,15 @@ def decimate_audio(df: DataFrame, factor: int) -> DataFrame:
     """Integer-factor audio downsample through the REAL codec
     (operators/audio.wav_decimate: decode -> frame slice -> re-encode), the
     audio sibling of resize_media: payload in, genuine lower-rate WAV
-    payload out, Arrow-batched, ok=false poison rows for undecodable
-    input."""
-    import pandas as pd
+    payload out, Arrow-batched; poison rows are ok=false with a NULL
+    payload."""
+    from aws_etl_fiap_spark.operators.audio import wav_decimate
 
-    from aws_etl_fiap_spark.operators.audio import WavFormatError, wav_decimate
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, mimes, oks, payloads = [], [], [], []
-            for mid, mime, payload in zip(
-                pdf["media_id"], pdf["mime"], pdf["payload"]
-            ):
-                ids.append(int(mid))
-                mimes.append(mime)
-                try:
-                    payloads.append(wav_decimate(bytes(payload), factor))
-                    oks.append(True)
-                except (WavFormatError, NotImplementedError):
-                    payloads.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {"media_id": ids, "mime": mimes, "ok": oks, "payload": payloads}
-            )
-
-    return df.select("media_id", "mime", "payload").mapInPandas(
-        run, "media_id long, mime string, ok boolean, payload binary"
+    return _map_payloads(
+        df, ["media_id", "mime", "payload"],
+        "media_id long, mime string, ok boolean, payload binary",
+        lambda mid, mime, raw: [(mid, mime, True, wav_decimate(raw, factor))],
+        poison=lambda mid, mime, _: [(mid, mime, False, None)],
     )
 
 
@@ -571,36 +489,23 @@ def audio_energy_windows(df: DataFrame, window_frames: int = 256) -> DataFrame:
     one row per (media, window) with frame count, peak, and the exact
     integer sum of squares (RMS numerator).  One-to-many like frame_sample:
     payloads die at this operator's input; only fixed-width window rows
-    shuffle."""
+    shuffle; poison rows contribute no windows."""
     import numpy as np
-    import pandas as pd
 
-    from aws_etl_fiap_spark.operators.audio import WavFormatError, wav_decode
+    from aws_etl_fiap_spark.operators.audio import wav_decode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, widx, nf, peak, ssq = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _, _, samples = wav_decode(bytes(payload))
-                except (WavFormatError, NotImplementedError):
-                    continue  # poison rows contribute no windows
-                mono = samples[:, 0].astype(np.int64)
-                for w in range(0, len(mono), window_frames):
-                    chunk = mono[w : w + window_frames]
-                    ids.append(int(mid))
-                    widx.append(w // window_frames)
-                    nf.append(len(chunk))
-                    peak.append(int(np.abs(chunk).max()))
-                    ssq.append(int((chunk * chunk).sum()))
-            yield pd.DataFrame(
-                {"media_id": ids, "window_idx": widx, "n_frames": nf,
-                 "peak": peak, "sum_sq": ssq}
-            )
+    def row(mid, raw):
+        _, _, samples = wav_decode(raw)
+        mono = samples[:, 0].astype(np.int64)
+        out = []
+        for w in range(0, len(mono), window_frames):
+            chunk = mono[w : w + window_frames]
+            out.append((mid, w // window_frames, len(chunk),
+                        int(np.abs(chunk).max()), int((chunk * chunk).sum())))
+        return out
 
-    return df.select("media_id", "payload").mapInPandas(
-        run,
+    return _map_payloads(
+        df, ["media_id", "payload"],
         "media_id long, window_idx int, n_frames long, peak long, sum_sq long",
+        row, poison=lambda *_: [],
     )

@@ -308,7 +308,7 @@ def allpairs_cosine_pairs_blocked(
     )
     tagged = a_side.unionByName(b_side)
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(key, pdf):
         ba, bb = key
         a_rows = pdf[pdf["side"] == 0]
         b_rows = pdf[pdf["side"] == 1]

@@ -138,6 +138,26 @@ def test_audio_stats_poison_row_for_garbage(spark):
     assert row["ok"] is False and row["n_frames"] is None
 
 
+
+def test_zero_sample_rate_is_format_error_and_poison_row(spark):
+    """A zero sample rate used to decode fine and then divide by zero in
+    wav_stats' duration, killing the job; it is now a malformed header,
+    like a zero-geometry AVI, and audio_stats degrades the row."""
+    from aws_etl_fiap_spark.operators.multimodal import audio_stats, extract_features
+
+    bad = wav_encode(np.array([1, -1, 2], dtype=np.int16), sample_rate=0)
+    with pytest.raises(WavFormatError, match="zero sample rate"):
+        wav_decode(bad)
+    with pytest.raises(WavFormatError):
+        wav_stats(bad)
+    df = spark.createDataFrame(
+        [(1, "audio/wav", bytearray(bad))], "media_id long, mime string, payload binary"
+    )
+    row = audio_stats(df).collect()[0]
+    assert row["ok"] is False and row["duration_ms"] is None
+    feat = extract_features(df).collect()[0]
+    assert feat["ok"] is False and feat["feature"] is None
+
 def test_wav_decimate_keeps_every_other_frame():
     s = np.array([10, 20, 30, 40, 50], dtype=np.int16)
     sr, ch, back = wav_decode(

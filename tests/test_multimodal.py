@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from aws_etl_fiap_spark.operators.multimodal import (
@@ -116,3 +118,150 @@ def test_binaryfile_roundtrip_bytes_and_ids(spark, tmp_path):
     assert set(back) == set(nonempty)
     for k, v in nonempty.items():
         assert back[k] == (len(v), v)
+
+
+def _media_rows():
+    """(media_id, mime, payload) over every codec tier: a valid payload of
+    each real format, malformed ones, an unsupported mime and a NULL."""
+    import numpy as np
+
+    from aws_etl_fiap_spark.operators.audio import wav_encode
+    from aws_etl_fiap_spark.operators.imaging import encode_png
+    from aws_etl_fiap_spark.operators.video import avi_encode
+
+    pcm = np.array([0, 300, -300, 1200, -5, 7, 9, -9, 4, 0], dtype=np.int16)
+    png = encode_png(np.arange(4 * 5 * 3, dtype=np.uint8).reshape(4, 5, 3))
+    avi = avi_encode(np.arange(2 * 4 * 6 * 3, dtype=np.uint8).reshape(2, 4, 6, 3), fps=5)
+    return [
+        (1, "fake/video", bytes(range(100))),
+        (2, "image/png", png),
+        (3, "image/png", b"\x89PNG"),
+        (4, "audio/wav", wav_encode(pcm, 8000)),
+        (5, "audio/wav", b"RIFF"),
+        (6, "video/avi", avi),
+        (7, "video/mp4", b"\x00" * 64),
+        (8, "fake/video", None),
+        (9, "video/avi", avi[:40]),
+    ]
+
+
+# operator -> (input kind, call, rows expected for the NULL payload/text)
+_PAYLOAD_OPS = {
+    "extract_features": ("media", lambda M, d: M.extract_features(d),
+                         [(8, "fake/video", False, None)]),
+    "frame_sample": ("media", lambda M, d: M.frame_sample(d, 3), []),
+    "resize_media": ("media", lambda M, d: M.resize_media(d, 3, 2),
+                     [(8, "fake/video", 3, 2, False, None)]),
+    "documents_as_wav": ("docs", lambda M, d: M.documents_as_wav(d),
+                         [(8, "audio/wav", None)]),
+    "documents_as_avi": ("docs", lambda M, d: M.documents_as_avi(d, 2, 4, 6, 5),
+                         [(8, "video/avi", None)]),
+    "video_meta": ("media", lambda M, d: M.video_meta(d),
+                   [(8, False, None, None, None, None, None)]),
+    "video_frame_stats": ("media", lambda M, d: M.video_frame_stats(d), []),
+    "audio_stats": ("media", lambda M, d: M.audio_stats(d),
+                    [(8, False, None, None, None, None, None, None, None)]),
+    "decimate_audio": ("media", lambda M, d: M.decimate_audio(d, 2),
+                       [(8, "fake/video", False, None)]),
+    "audio_energy_windows": ("media", lambda M, d: M.audio_energy_windows(d, 4), []),
+}
+
+
+def _payload_input(spark, kind):
+    # 12 partitions for 9 rows: at least 3 are zero-row partitions
+    if kind == "docs":
+        rows = [(1, "hello world"), (3, ""), (4, "zz top"), (8, None)]
+        return spark.createDataFrame(rows, "doc_id long, text string").repartition(12)
+    return spark.createDataFrame(
+        _media_rows(), "media_id long, mime string, payload binary"
+    ).repartition(12)
+
+
+def _cell(v):
+    """One value as plain Python, so Spark's pandas dtypes (NaN for a NULL
+    in an integral column, ndarray for arrays) compare with the in-process
+    frames' Python values."""
+    import numpy as np
+
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    if isinstance(v, (list, np.ndarray)):
+        return tuple(float(x) for x in v)
+    if isinstance(v, (bool, np.bool_)):
+        return bool(v)
+    if isinstance(v, (float, np.floating)) and float(v).is_integer():
+        return int(v)
+    if isinstance(v, np.integer):
+        return int(v)
+    return v
+
+
+def _sorted_rows(pdf):
+    import pandas as pd
+
+    rows = sorted((tuple(_cell(v) for v in r) for r in pdf.itertuples(index=False)), key=repr)
+    return pd.DataFrame(rows, columns=list(pdf.columns), dtype=object)
+
+
+@pytest.mark.parametrize("op", sorted(_PAYLOAD_OPS))
+def test_payload_loop_in_process_equals_spark_arrow_path(spark, monkeypatch, op):
+    """Arrow twin: the one payload batch loop run in-process over
+    ``toPandas()`` of each operator's selected input, split into an empty
+    batch plus two batches, equals what Spark's ``mapInPandas`` emits —
+    over malformed payloads, a NULL payload (or NULL text) and zero-row
+    partitions."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from aws_etl_fiap_spark.operators import multimodal as M
+
+    wired = {}
+    real = M._map_payloads
+
+    def spy(df, cols, schema, row_fn, *, poison, catch=M._POISON):
+        wired.update(df=df, cols=cols, schema=schema, row_fn=row_fn, poison=poison, catch=catch)
+        return real(df, cols, schema, row_fn, poison=poison, catch=catch)
+
+    monkeypatch.setattr(M, "_map_payloads", spy)
+    kind, call, _ = _PAYLOAD_OPS[op]
+    got = call(M, _payload_input(spark, kind)).toPandas()
+
+    src = wired["df"].select(*wired["cols"]).toPandas()
+    batches = [src.iloc[:0], src.iloc[:3], src.iloc[3:]]
+    frames = list(M._payload_batches(
+        iter(batches), wired["schema"], wired["row_fn"], wired["poison"], wired["catch"]
+    ))
+    assert len(frames) == 2  # the empty batch yields no frame
+    want = pd.DataFrame(
+        [r for f in frames for r in f.itertuples(index=False)], columns=frames[0].columns
+    )
+    assert list(want.columns) == list(got.columns)
+    assert len(got) > 0
+    assert_frame_equal(_sorted_rows(got), _sorted_rows(want))
+
+
+@pytest.mark.parametrize("op", sorted(_PAYLOAD_OPS))
+def test_null_payload_takes_the_poison_outcome(spark, op):
+    """A NULL payload (NULL text for the generators) used to raise
+    ``TypeError`` from ``bytes(None)`` in the Python worker and fail the
+    job; it now yields the operator's poison outcome, like any malformed
+    payload: a degraded row, or no rows for the one-to-many operators."""
+    from aws_etl_fiap_spark.operators import multimodal as M
+
+    kind, call, expect = _PAYLOAD_OPS[op]
+    out = call(M, _payload_input(spark, kind))
+    rows = [tuple(_cell(v) for v in r) for r in out.filter(F.col("media_id") == 8).collect()]
+    assert rows == expect
+    assert out.filter(F.col("media_id") != 8).count() > 0
+
+
+def test_write_payload_files_skips_null_payloads(spark, tmp_path):
+    from aws_etl_fiap_spark.operators.multimodal import write_payload_files
+
+    df = spark.createDataFrame(
+        [(1, bytearray(b"abc")), (2, None)], "media_id long, payload binary"
+    )
+    assert write_payload_files(df, str(tmp_path / "blobs")) == 1
+    assert sorted(p.name for p in (tmp_path / "blobs").iterdir()) == ["000000000001.bin"]

@@ -106,6 +106,23 @@ def test_blocked_allpairs_matches_broadcast_bit_for_bit(spark, sf_correctness):
     assert got == ref  # dict equality: same pairs AND bit-equal floats
 
 
+
+def test_blocked_allpairs_raises_no_type_hint_warning(spark):
+    """applyInPandas infers its eval type from the function's hints; a hint
+    on only some parameters makes PySpark warn "Cannot infer the eval type
+    from type hints" on every call, so the scoring function hints none."""
+    import warnings
+
+    from aws_etl_fiap_spark.operators.similarity import allpairs_cosine_pairs_blocked
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.1])], "vec_id long, embedding array<double>"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        allpairs_cosine_pairs_blocked(emb, threshold=0.5, n_blocks=2)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
 def test_allpairs_collect_guard_raises(spark, sf_correctness):
     """The driver-collect variant must refuse corpora past its loud bound
     instead of silently OOMing the driver at scale."""
