@@ -23,7 +23,8 @@ Design for 100 TB of media:
   :func:`_map_payloads` / :func:`_payload_batches`: an operator states only
   its output schema and a per-row function that returns zero or more
   output tuples for one row.  The poison rule lives there once: a NULL
-  payload, or a row whose function raises one of ``_POISON``
+  payload, a NULL mime (the loop checks every selected column after the
+  leading id), or a row whose function raises one of ``_POISON``
   (``ValueError`` — the Png/Wav/AviFormatError family subclasses it — or
   ``NotImplementedError`` for codecs behind the tiered boundary), yields
   the operator's own poison outcome — a degraded ``ok=false`` row with
@@ -145,11 +146,12 @@ def _payload_batches(batches, schema: str, row_fn, poison, catch=_POISON):
     """The Arrow batch loop behind every per-payload operator.
 
     Each row of a non-empty batch arrives as its selected columns in order,
-    the LAST being the binary payload: a NULL payload yields
-    ``poison(*row)``; otherwise ``row_fn(*row)`` (payload as ``bytes``)
-    yields the row's output tuples, and an exception in ``catch`` yields
-    ``poison(*row)`` instead.  One pandas frame per batch, named after the
-    flat DDL ``schema`` (no nested types, so its fields split on commas)."""
+    the FIRST being the id and the LAST the binary payload: a NULL in any
+    column after the id yields ``poison(*row)``; otherwise ``row_fn(*row)``
+    (payload as ``bytes``) yields the row's output tuples, and an exception
+    in ``catch`` yields ``poison(*row)`` instead.  One pandas frame per
+    batch, named after the flat DDL ``schema`` (no nested types, so its
+    fields split on commas)."""
     names = [field.split()[0] for field in schema.split(",")]
     for pdf in batches:
         if not len(pdf):
@@ -157,7 +159,7 @@ def _payload_batches(batches, schema: str, row_fn, poison, catch=_POISON):
         rows = []
         for row in zip(*(pdf[c] for c in pdf.columns)):
             *key, payload = row
-            if payload is None:
+            if any(v is None for v in row[1:]):
                 rows.extend(poison(*row))
                 continue
             try:

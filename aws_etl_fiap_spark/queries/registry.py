@@ -18,17 +18,21 @@ Determinism rules every entry must obey (else the hash is meaningless):
   to HUGEINT (int128), which a pandas/arrow fetch renders as float64 —
   value-hash poison that a fetchall()-based local compare CANNOT see (the
   round-6 driver failed exactly the five uncast-SUM oracles while the
-  local twin passed them byte-exactly).  ``scripts/audit_types.py``
-  mechanically screens the whole registry for this class; run it on every
-  new batch BEFORE the driver does.
+  local twin passed them byte-exactly).  ``scripts/verify_driver.py``
+  screens the whole registry for this class (its ``FLAG`` lines) in the
+  same sweep as the exact compare; run it on every new batch BEFORE the
+  driver does.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from aws_etl_fiap_spark.sources.readers import TABLES
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -52,6 +56,17 @@ def query(name: str, oracle: str) -> Callable[[SparkQuery], SparkQuery]:
         return fn
 
     return deco
+
+
+def oracle_views(con, sf_dir: str):
+    """Register each testdata table under ``sf_dir`` as a DuckDB view of
+    its name on ``con`` (the oracle's environment above); absent tables
+    are skipped.  Returns ``con``."""
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 # The round driver grades only the first 50 ``queries()`` entries; this

@@ -15,6 +15,7 @@ import json
 import os
 import sys
 import time
+from contextlib import nullcontext
 
 from aws_etl_fiap_spark.queries import REGISTRY
 from aws_etl_fiap_spark.session import get_spark
@@ -32,9 +33,9 @@ HEADLINE = [
 ]
 
 # One representative per operator family beyond the headline; timed and
-# reported, but not part of the headline total. The full 80+ registry runs
-# with SPARK_GRAFT_BENCH_ALL=1 (kept out of the default run to bound the
-# per-round bench wall-clock).
+# reported, but not part of the headline total. Every registered query (240
+# today) runs with SPARK_GRAFT_BENCH_ALL=1 (kept out of the default run to
+# bound the per-round bench wall-clock).
 REPRESENTATIVE = [
     "tpch_q9_product_profit",        # widest star join
     "tpch_q18_large_orders",         # agg-then-semi-join
@@ -78,6 +79,40 @@ REPRESENTATIVE = [
 ]
 
 
+def time_queries(spark, sf_dir, names, runs, around_run=None):
+    """Time each registered query in ``names``, forced with ``count()``.
+
+    One warm-up of the flagship first (JVM + codegen + parquet footer
+    caches).  Then per query one cold run, which pays one-time whole-stage-
+    codegen compilation (hundreds of ms of Janino per distinct plan, which
+    a long-lived cluster amortizes to zero only while the class stays in
+    the codegen cache: session.CODEGEN_CACHE_ENTRIES), and ``runs`` steady
+    runs; callers report the MIN with the (max-min) spread so round-over-
+    round deltas can be separated from machine-load noise (round-2
+    verdict: byte-identical queries drifted a uniform 1.2-1.4x between
+    rounds under n<=2; the r8->r9 +32% drift on byte-identical plans
+    pushed the default from 3 to 5 — r9 verdict task 2: the rebuttal must
+    live IN the artifact).
+
+    ``around_run(name, i)``, if given, returns a context manager entered
+    around steady run ``i`` outside its timed region.  Yields ``(name,
+    rows, cold_s, [steady_s, ...])`` per query.
+    """
+    REGISTRY["flagship_refined_summary"].spark(spark, sf_dir).count()
+    for name in names:
+        fn = REGISTRY[name].spark
+        start = time.perf_counter()
+        rows = fn(spark, sf_dir).count()
+        cold = time.perf_counter() - start
+        steady = []
+        for i in range(runs):
+            with around_run(name, i) if around_run else nullcontext():
+                start = time.perf_counter()
+                fn(spark, sf_dir).count()
+                steady.append(time.perf_counter() - start)
+        yield name, rows, cold, steady
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -100,33 +135,14 @@ def main() -> None:
     else:
         names += [n for n in REPRESENTATIVE if n in REGISTRY and n not in names]
 
-    # Warmup: JVM + codegen + parquet footer caches.
-    REGISTRY["flagship_refined_summary"].spark(spark, sf_dir).count()
-
-    # Steady-state throughput: one cold run (pays one-time whole-stage-
-    # codegen compilation — hundreds of ms of Janino per distinct plan, which
-    # a long-lived cluster amortizes to zero only while the class stays in
-    # the codegen cache: session.CODEGEN_CACHE_ENTRIES), then n >= 5 timed
-    # steady runs; report the MIN with the (max-min) spread so round-over-
-    # round deltas can be separated from machine-load noise (round-2
-    # verdict: byte-identical queries drifted a uniform 1.2-1.4x between
-    # rounds under n<=2; the r8->r9 +32% drift on byte-identical plans
-    # pushed the default from 3 to 5 — r9 verdict task 2: the rebuttal must
-    # live IN the artifact).
     n_steady = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     cold: dict[str, float] = {}
     rows: dict[str, int] = {}
-    for name in names:
-        start = time.perf_counter()
-        rows[name] = REGISTRY[name].spark(spark, sf_dir).count()
-        cold[name] = round(time.perf_counter() - start, 4)
-        runs = []
-        for _ in range(n_steady):
-            start = time.perf_counter()
-            REGISTRY[name].spark(spark, sf_dir).count()
-            runs.append(time.perf_counter() - start)
+    for name, n_rows, cold_s, runs in time_queries(spark, sf_dir, names, n_steady):
+        rows[name] = n_rows
+        cold[name] = round(cold_s, 4)
         timings[name] = round(min(runs), 4)
         spread[name] = round(max(runs) - min(runs), 4)
 

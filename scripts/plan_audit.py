@@ -25,16 +25,16 @@ Usage: python scripts/plan_audit.py [--sf DIR] [--out PLANS.md]
 from __future__ import annotations
 
 import argparse
-import os
 import re
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import _checkout  # noqa: F401
 
 
-def features(plan: str) -> dict:
+def features(df) -> dict:
+    """The plan counts of ``df``'s physical plan (``executedPlan``, each
+    node once); the one plan counter the registry scripts share."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln or "Scan parquet" in ln]
     return {
         "scans": len(scans),
@@ -51,6 +51,11 @@ def features(plan: str) -> dict:
         # scale).
         "partial": len(re.findall(r"partial_(?:sum|count|min|max|avg)", plan)),
         "arrow": plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"),
+        # every Python boundary: the Arrow stages plus UDF evaluation
+        "python": sum(
+            plan.count(k)
+            for k in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+        ),
         "gwin": len(
             re.findall(r"Window .*windowspecdefinition\(((?!.*PARTITION).)*$", plan, re.M)
         ),
@@ -73,12 +78,9 @@ def main() -> None:
     t0 = time.time()
     for name in sorted(REGISTRY):
         try:
-            df = REGISTRY[name].spark(spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            rows.append((name, features(REGISTRY[name].spark(spark, args.sf))))
         except Exception as exc:  # noqa: BLE001 — inventory, not a gate
             failed.append((name, f"{type(exc).__name__}: {exc}"[:100]))
-            continue
-        rows.append((name, features(plan)))
     took = time.time() - t0
 
     tot = {k: sum(f[k] for _, f in rows) for k in rows[0][1]} if rows else {}

@@ -1,10 +1,12 @@
 """Per-query profiling for the bench set (guide §1: measure first).
 
-For each query: warm once, then time ``count()`` (the bench action) and a
-``noop``-sink write (full materialization, guide §1.4), and record the number
-of Spark jobs/stages/tasks the steady run launches (statusTracker over a
-per-query job group) and the classes Janino compiles during it
-(``compiles``: nonzero means a steady run missed the codegen cache).
+For each query: time it with bench.py's loop (one cold run, then ``--runs``
+steady ``count()`` runs), optionally a ``noop``-sink write (full
+materialization, guide §1.4), and record the number of Spark jobs/stages/tasks
+the last steady run launches (statusTracker over a per-query job group), the
+classes Janino compiles during it (``compiles``: nonzero means a steady run
+missed the codegen cache), and the plan's Exchange and Python-node counts
+(plan_audit.features, the counter behind PLANS.md's EXCH column).
 Writes JSON to plans/r14/profile_<tag>.json and the ``explain("formatted")``
 text per query to plans/r14/<name>_<tag>.txt.
 
@@ -16,16 +18,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
 import time
+from contextlib import contextmanager
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from _checkout import ROOT
 
-from aws_etl_fiap_spark.queries import REGISTRY  # noqa: E402
-from aws_etl_fiap_spark.session import codegen_compiles, get_spark  # noqa: E402
-
-BENCH_NAMES = None  # filled in main from bench.py lists
+import bench
+from aws_etl_fiap_spark.queries import REGISTRY
+from aws_etl_fiap_spark.session import codegen_compiles, get_spark
+from plan_audit import features
 
 
 def main() -> None:
@@ -36,8 +37,6 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true", help="also time a noop-sink write")
     args = ap.parse_args()
 
-    import bench
-
     names = [n for n in bench.HEADLINE + bench.REPRESENTATIVE if n in REGISTRY]
     if args.only:
         names = [n for n in args.only.split(",") if n in REGISTRY]
@@ -45,36 +44,28 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="profile_bench")
     sc = spark.sparkContext
-    os.makedirs(os.path.join(REPO, "plans", "r14"), exist_ok=True)
+    out_dir = os.path.join(ROOT, "plans", "r14")
+    os.makedirs(out_dir, exist_ok=True)
 
-    # Warmup
-    REGISTRY["flagship_refined_summary"].spark(spark, sf_dir).count()
+    compiled = {}
+
+    @contextmanager
+    def accounted(name, i):
+        sc.setJobGroup(f"{name}-run{i}", name)
+        before = codegen_compiles(spark)
+        yield
+        compiled[name] = codegen_compiles(spark) - before
+        sc.setJobGroup(None, None)
 
     out: dict[str, dict] = {}
-    for name in names:
+    for name, _, cold, runs in bench.time_queries(spark, sf_dir, names, args.runs, accounted):
         fn = REGISTRY[name].spark
         df = fn(spark, sf_dir)
-        # plan text
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        with open(os.path.join(REPO, "plans", "r14", f"{name}_{args.tag}.txt"), "w") as fh:
-            fh.write(plan)
-        # cold run (per-process first execution of this plan)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        cold = time.perf_counter() - t0
-        # steady runs with job accounting on the last one
-        runs = []
-        for i in range(args.runs):
-            group = f"{name}-run{i}"
-            sc.setJobGroup(group, name)
-            compiled = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-            compiled = codegen_compiles(spark) - compiled
-            sc.setJobGroup(None, None)
+        with open(os.path.join(out_dir, f"{name}_{args.tag}.txt"), "w") as fh:
+            fh.write(df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            ))
+        plan = features(df)
         tracker = sc.statusTracker()
         job_ids = tracker.getJobIdsForGroup(f"{name}-run{args.runs - 1}")
         n_stages = 0
@@ -95,12 +86,9 @@ def main() -> None:
             "jobs": len(job_ids),
             "stages": n_stages,
             "tasks": n_tasks,
-            "compiles": compiled,
-            "exchanges": plan.count("Exchange"),
-            "python_nodes": sum(
-                plan.count(k)
-                for k in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
-            ),
+            "compiles": compiled[name],
+            "exchanges": plan["exch"],
+            "python_nodes": plan["python"],
         }
         if args.noop:
             t0 = time.perf_counter()
@@ -109,7 +97,7 @@ def main() -> None:
         out[name] = rec
         print(json.dumps({name: rec}), flush=True)
 
-    path = os.path.join(REPO, "plans", "r14", f"profile_{args.tag}.json")
+    path = os.path.join(out_dir, f"profile_{args.tag}.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print("wrote", path)

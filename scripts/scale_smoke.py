@@ -32,11 +32,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import _checkout  # noqa: F401
 
 
 def main() -> None:

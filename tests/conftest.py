@@ -8,8 +8,8 @@ import os
 import duckdb
 import pytest
 
+from aws_etl_fiap_spark.queries.registry import oracle_views
 from aws_etl_fiap_spark.session import get_spark
-from aws_etl_fiap_spark.sources.readers import TABLES
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_SF_CORRECTNESS", "/root/testdata/sf0.01")
@@ -32,26 +32,15 @@ def sf_correctness() -> str:
     return SF_CORRECTNESS
 
 
-def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Replicate the driver's oracle environment: every testdata table
-    pre-registered as a view."""
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
 @pytest.fixture(scope="session")
 def duck_smoke(sf_smoke):
-    con = make_duckdb(sf_smoke)
+    con = oracle_views(duckdb.connect(), sf_smoke)
     yield con
     con.close()
 
 
 @pytest.fixture(scope="session")
 def duck_correctness(sf_correctness):
-    con = make_duckdb(sf_correctness)
+    con = oracle_views(duckdb.connect(), sf_correctness)
     yield con
     con.close()

@@ -122,7 +122,8 @@ def test_binaryfile_roundtrip_bytes_and_ids(spark, tmp_path):
 
 def _media_rows():
     """(media_id, mime, payload) over every codec tier: a valid payload of
-    each real format, malformed ones, an unsupported mime and a NULL."""
+    each real format, malformed ones, an unsupported mime, a NULL payload
+    and a NULL mime."""
     import numpy as np
 
     from aws_etl_fiap_spark.operators.audio import wav_encode
@@ -142,33 +143,37 @@ def _media_rows():
         (7, "video/mp4", b"\x00" * 64),
         (8, "fake/video", None),
         (9, "video/avi", avi[:40]),
+        (10, None, bytes(range(100))),
     ]
 
 
-# operator -> (input kind, call, rows expected for the NULL payload/text)
+# operator -> (input kind, call, rows expected for the NULL payload/text
+# (id 8) and the NULL mime (id 10, media input only))
 _PAYLOAD_OPS = {
     "extract_features": ("media", lambda M, d: M.extract_features(d),
-                         [(8, "fake/video", False, None)]),
+                         [(8, "fake/video", False, None), (10, None, False, None)]),
     "frame_sample": ("media", lambda M, d: M.frame_sample(d, 3), []),
     "resize_media": ("media", lambda M, d: M.resize_media(d, 3, 2),
-                     [(8, "fake/video", 3, 2, False, None)]),
+                     [(8, "fake/video", 3, 2, False, None), (10, None, 3, 2, False, None)]),
     "documents_as_wav": ("docs", lambda M, d: M.documents_as_wav(d),
                          [(8, "audio/wav", None)]),
     "documents_as_avi": ("docs", lambda M, d: M.documents_as_avi(d, 2, 4, 6, 5),
                          [(8, "video/avi", None)]),
     "video_meta": ("media", lambda M, d: M.video_meta(d),
-                   [(8, False, None, None, None, None, None)]),
+                   [(8, False, None, None, None, None, None),
+                    (10, False, None, None, None, None, 100)]),
     "video_frame_stats": ("media", lambda M, d: M.video_frame_stats(d), []),
     "audio_stats": ("media", lambda M, d: M.audio_stats(d),
-                    [(8, False, None, None, None, None, None, None, None)]),
+                    [(8, False, None, None, None, None, None, None, None),
+                     (10, False, None, None, None, None, None, None, None)]),
     "decimate_audio": ("media", lambda M, d: M.decimate_audio(d, 2),
-                       [(8, "fake/video", False, None)]),
+                       [(8, "fake/video", False, None), (10, None, False, None)]),
     "audio_energy_windows": ("media", lambda M, d: M.audio_energy_windows(d, 4), []),
 }
 
 
 def _payload_input(spark, kind):
-    # 12 partitions for 9 rows: at least 3 are zero-row partitions
+    # 12 partitions for 10 rows: at least 2 are zero-row partitions
     if kind == "docs":
         rows = [(1, "hello world"), (3, ""), (4, "zz top"), (8, None)]
         return spark.createDataFrame(rows, "doc_id long, text string").repartition(12)
@@ -246,15 +251,17 @@ def test_payload_loop_in_process_equals_spark_arrow_path(spark, monkeypatch, op)
 def test_null_payload_takes_the_poison_outcome(spark, op):
     """A NULL payload (NULL text for the generators) used to raise
     ``TypeError`` from ``bytes(None)`` in the Python worker and fail the
-    job; it now yields the operator's poison outcome, like any malformed
+    job, and a NULL mime an ``AttributeError`` from ``mime.startswith``;
+    both now yield the operator's poison outcome, like any malformed
     payload: a degraded row, or no rows for the one-to-many operators."""
     from aws_etl_fiap_spark.operators import multimodal as M
 
     kind, call, expect = _PAYLOAD_OPS[op]
     out = call(M, _payload_input(spark, kind))
-    rows = [tuple(_cell(v) for v in r) for r in out.filter(F.col("media_id") == 8).collect()]
+    null = F.col("media_id").isin(8, 10)
+    rows = sorted(tuple(_cell(v) for v in r) for r in out.filter(null).collect())
     assert rows == expect
-    assert out.filter(F.col("media_id") != 8).count() > 0
+    assert out.filter(~null).count() > 0
 
 
 def test_write_payload_files_skips_null_payloads(spark, tmp_path):

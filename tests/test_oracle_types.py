@@ -9,9 +9,9 @@ caught it.  This test closes the class permanently: DESCRIBE every oracle
 any HUGEINT/UHUGEINT output column.  The fix is always the same: wrap the
 expression in CAST(... AS BIGINT) (registry.py module docstring).
 
-scripts/audit_types.py remains the deeper dynamic screen (runs both
-engines, also catches unhashable cells and int/float dtype splits); this
-test is the cheap always-on guard.
+The FLAG screen in scripts/verify_driver.py remains the deeper dynamic
+check (runs both engines, also catches unhashable cells and int/float
+dtype splits); this test is the cheap always-on guard.
 """
 
 from __future__ import annotations
